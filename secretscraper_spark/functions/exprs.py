@@ -59,11 +59,6 @@ def host_of(netloc: Column) -> Column:
     )
 
 
-def port_of(netloc: Column) -> Column:
-    parts = F.split(netloc, ":")
-    return F.when(F.size(parts) == 2, F.trim(parts.getItem(1))).otherwise(F.lit(""))
-
-
 def root_domain(host: Column) -> Column:
     """P9 PSL-aware root domain as a pure Column expr, kernel-parity with
     purekit.get_root_domain (tested identical over the PSL cases). The

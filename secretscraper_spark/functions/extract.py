@@ -20,7 +20,6 @@ from pyspark.sql import types as T
 from ..schemas import CHILD_STRUCT, SECRET_STRUCT, URL_PART_FIELDS
 from .purekit import (
     LinkExtractor,
-    RegexExtractor,
     extract_title,
     parse6,
     unparse6,
@@ -73,38 +72,6 @@ def make_secrets_udf(
             yield pd.Series(out)
 
     return secrets_udf
-
-
-def make_links_udf(finder_rules: dict[str, str]) -> Callable:
-    """(scheme, netloc, text) → array<struct<url_norm + 6-tuple>>.
-
-    P1 ∪ P2 per page, set-deduped on the 6-tuple (reference
-    urlparser.py:105-140). Depth/parent bookkeeping stays relational."""
-
-    @F.pandas_udf(T.ArrayType(CHILD_STRUCT))
-    def links_udf(it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        extractor = LinkExtractor(finder_rules)
-        for schemes, netlocs, texts in it:
-            out = []
-            for scheme, netloc, text in zip(schemes, netlocs, texts):
-                if text is None:
-                    out.append([])
-                    continue
-                base6 = (scheme or "", netloc or "", "", "", "", "")
-                kids = extractor.extract(base6, text)
-                out.append(
-                    [
-                        {
-                            "url_norm": unparse6(k),
-                            "scheme": k[0], "netloc": k[1], "path": k[2],
-                            "params": k[3], "query": k[4], "fragment": k[5],
-                        }
-                        for k in sorted(kids)
-                    ]
-                )
-            yield pd.Series(out)
-
-    return links_udf
 
 
 _EXTRACT_STRUCT = T.StructType(
@@ -175,37 +142,3 @@ def make_extract_udf(
             )
 
     return extract_udf
-
-
-def make_bs_elements_udf(filter_func: Callable) -> Callable:
-    """P5 — the reference's ``BSHandler`` surface as an Arrow UDF:
-    text → array<struct<rule_name,match>> where *filter_func* runs over
-    the parsed BeautifulSoup tree (handler.py:140-160). Requires bs4 on
-    the executors; the import raises at first task, matching the
-    import-gate behavior of the hyperscan engine."""
-
-    @F.pandas_udf(T.ArrayType(SECRET_STRUCT))
-    def bs_elements_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from .purekit import BSElementExtractor
-
-        ex = BSElementExtractor(filter_func)
-        for texts in it:
-            yield pd.Series(
-                [
-                    []
-                    if t is None
-                    else [
-                        {"rule_name": r, "match": m} for r, m in ex.extract(t)
-                    ]
-                    for t in texts
-                ]
-            )
-
-    return bs_elements_udf
-
-
-@F.pandas_udf(T.StringType())
-def title_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """text → title string (reference util.py:109-116)."""
-    for texts in it:
-        yield texts.map(lambda t: extract_title(t) if t is not None else "")

@@ -12,12 +12,10 @@ Re-expresses the reference's asyncio loop (crawler.py:175-217, 268-303,
 Scale design (10^10 frontier / 1000 executors):
 - fetch = hash join frontier⋈pages on xxhash64(url_norm); AQE picks
   shuffle-hash vs sort-merge; bucketed pages makes it co-located.
-- seen dedup: exact left_anti at test scale; seen_filter picks a prefilter
-  that routes definite-unseen rows around the join — 'broadcast-bloom'
-  (one driver bitmap, bench scale), 'bucketed-bloom' / 'cuckoo' (sharded
-  (bucket, filter) tables built/updated/probed on the executors — the
-  10^10 north-rule form; cuckoo adds delete() for TTL recrawl).
-  Correctness never depends on the filter.
+- seen dedup: exact left_anti by default; seen_filter='bucketed-bloom'
+  adds a sharded (bucket, bitmap) prefilter built, updated and probed on
+  the executors (plans/bloom.py) that routes definite-unseen rows around
+  the join. Correctness never depends on the filter.
 - discovery ordering: two-phase distributed rank (plans/ranking.py) — no
   single-task window anywhere.
 - budget cutoff: orderBy(seq).limit(k) = TakeOrderedAndProject.
@@ -48,7 +46,6 @@ from ..functions.extract import make_extract_udf
 from ..schemas import EDGES_SCHEMA, FRONTIER_SCHEMA, SECRETS_SCHEMA
 from . import bloom as bloommod
 from . import checkpoint as ckpt
-from . import cuckoo as cuckoomod
 from . import extraction
 from .politeness import (
     assign_fetch_schedule,
@@ -91,6 +88,13 @@ class CrawlResult:
     #: "rows": int}} — run-level sums of the per-tier fold records; the
     #: nodes/edges/secrets/found frames above are EMPTY in that mode
     folded: dict | None = None
+
+
+def _require(ok: bool, msg: str) -> None:
+    """Refuse a config that would silently diverge. ValueError, not
+    assert: ``python -O`` strips asserts."""
+    if not ok:
+        raise ValueError(msg)
 
 
 def _accept_expr(cfg: CrawlConfig):
@@ -180,12 +184,11 @@ class SparkCrawler:
         pages: DataFrame,
         cfg: CrawlConfig | None = None,
         robots: DataFrame | None = None,
-        use_bloom: bool = False,
         checkpoint_dir: str | None = None,
         schedule_politeness: bool = True,
         fetch_mode: str = "join",
         page_fetch_fn=None,
-        seen_filter: str | None = None,
+        seen_filter: str = "exact",
         rules: dict[str, str] | None = None,
         link_rules: dict[str, str] | None = None,
         paced_virtual: bool = True,
@@ -211,17 +214,13 @@ class SparkCrawler:
         pages store stands in (test scale only; live deployments pass an
         HTTP fetcher).
 
-        seen_filter picks the URL-seen prefilter in front of the exact
-        anti-join (correctness NEVER depends on it — it only routes rows):
-        - 'exact' (default): plain left_anti against the seen table.
-        - 'broadcast-bloom': one driver-merged broadcast bitmap
-          (plans/bloom.build_bloom) — fast at bench scale, but the bitmap
-          lives on the driver: ~12 GB at the 10^10 north-rule scale.
-        - 'bucketed-bloom': sharded (bucket, bitmap) table, built/updated/
-          probed entirely on the executors — the 10^10 form.
-        - 'cuckoo': sharded cuckoo filter (plans/cuckoo.py) — same scale
-          shape as bucketed-bloom, plus delete() for TTL recrawl.
-        ``use_bloom=True`` is the legacy spelling of 'broadcast-bloom'.
+        seen_filter picks how the enqueue drops already-seen URLs
+        (correctness NEVER depends on the filter — it only routes rows):
+        - 'exact' (default): plain left_anti against the seen table — the
+          measured winner wherever seen fits storage (BASELINE.md r3).
+        - 'bucketed-bloom': a sharded (bucket, bitmap) prefilter
+          (plans/bloom.py), built/updated/probed entirely on the
+          executors, in front of the exact anti-join — the 10^10 form.
 
         budget_mode picks how a tier's page-budget cut selects pages:
         - 'bfs' (default, reference parity crawler.py:190-191): first
@@ -279,13 +278,19 @@ class SparkCrawler:
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
         self.robots = robots
-        if seen_filter is None:
-            seen_filter = "broadcast-bloom" if use_bloom else "exact"
-        assert seen_filter in ("exact", "broadcast-bloom", "bucketed-bloom", "cuckoo")
+        _require(
+            seen_filter in ("exact", "bucketed-bloom"),
+            f"seen_filter must be 'exact' or 'bucketed-bloom', "
+            f"got {seen_filter!r}",
+        )
         self.seen_filter = seen_filter
         self.checkpoint_dir = checkpoint_dir
         self.schedule_politeness = schedule_politeness
-        assert fetch_mode in ("join", "paced", "mapped")
+        _require(
+            fetch_mode in ("join", "paced", "mapped"),
+            f"fetch_mode must be 'join', 'paced' or 'mapped', "
+            f"got {fetch_mode!r}",
+        )
         self.fetch_mode = fetch_mode
         # fetch_mode='mapped': fetch is a caller-supplied DataFrame
         # transform frontier→fetched-rows (frontier cols + status/
@@ -294,8 +299,9 @@ class SparkCrawler:
         # sitegen.synthetic_fetch_map, or any in-plan KV/service lookup).
         # Stays fully lazy, so it fuses into the extraction stage exactly
         # like the join path.
-        assert fetch_mode != "mapped" or fetch_map_fn is not None, (
-            "fetch_mode='mapped' requires fetch_map_fn"
+        _require(
+            fetch_mode != "mapped" or fetch_map_fn is not None,
+            "fetch_mode='mapped' requires fetch_map_fn",
         )
         self.fetch_map_fn = fetch_map_fn
         # fold_outputs: per-tier digest/count folding instead of
@@ -307,6 +313,12 @@ class SparkCrawler:
         # them), and are bit-comparable with a retained-mode run's
         # digests (parity-tested). The result frames come back EMPTY.
         self.fold_outputs = fold_outputs
+        _require(
+            budget_mode in ("bfs", "host-proportional"),
+            f"budget_mode must be 'bfs' or 'host-proportional', "
+            f"got {budget_mode!r}",
+        )
+        self.budget_mode = budget_mode
         # tier_chunk_rows: split any BFS tier bigger than this into
         # seq-contiguous sub-tiers processed back-to-back at the same
         # depth — the single-JVM heap mitigation for ≥5·10^7-row tiers
@@ -317,33 +329,40 @@ class SparkCrawler:
         # later chunks' and a child linked from several chunks keeps its
         # earliest parent — discovery_seq, seen, and fold digests are
         # bit-identical to the monolithic tier (test_tier_chunking_*).
-        # Per-tier STATE folds (quarantine, AIMD, traps) would observe
-        # chunk-grained instead of tier-grained stats, so chunking
-        # refuses those combinations rather than silently approximating.
-        assert tier_chunk_rows is None or tier_chunk_rows >= 1
-        assert tier_chunk_rows is None or (
-            quarantine_fails is None
-            and not adaptive_delay
-            and trap_cap is None
-        ), (
-            "tier_chunk_rows changes the granularity quarantine/AIMD/trap "
-            "folds observe — run those tier-grained features unchunked"
-        )
+        # Per-tier STATE folds (quarantine, AIMD, traps) and the
+        # host-proportional budget cut would observe chunk-grained
+        # instead of tier-grained data, so chunking refuses those
+        # combinations rather than silently approximating.
+        if tier_chunk_rows is not None:
+            _require(tier_chunk_rows >= 1, "tier_chunk_rows must be >= 1")
+            _require(
+                quarantine_fails is None
+                and not adaptive_delay
+                and trap_cap is None,
+                "tier_chunk_rows changes the granularity quarantine/AIMD/"
+                "trap folds observe — run those tier-grained features "
+                "unchunked",
+            )
+            _require(
+                budget_mode == "bfs" or self.cfg.max_page_num <= 0,
+                "tier_chunk_rows with budget_mode='host-proportional' and "
+                "a page budget allocates host quotas per chunk, not per "
+                "tier — a different page set from the unchunked run",
+            )
         self.tier_chunk_rows = tier_chunk_rows
-        assert budget_mode in ("bfs", "host-proportional")
-        self.budget_mode = budget_mode
         self.trap_cap = trap_cap
         self.trap_prefix_depth = trap_prefix_depth
-        assert quarantine_fails is None or quarantine_fails >= 1, (
+        _require(
+            quarantine_fails is None or quarantine_fails >= 1,
             "quarantine_fails must be >= 1 (0 would quarantine every "
-            "host, including all-success ones)"
+            "host, including all-success ones)",
         )
-        assert quarantine_cooldown_tiers is None or (
-            quarantine_fails is not None and quarantine_cooldown_tiers >= 1
-        ), (
+        _require(
+            quarantine_cooldown_tiers is None
+            or (quarantine_fails is not None and quarantine_cooldown_tiers >= 1),
             "quarantine_cooldown_tiers requires quarantine_fails and must "
             "be >= 1 (0 would expire every quarantine before its first "
-            "gated tier — a silent no-op)"
+            "gated tier — a silent no-op)",
         )
         self.quarantine_fails = quarantine_fails
         self.quarantine_cooldown_tiers = quarantine_cooldown_tiers
@@ -469,9 +488,9 @@ class SparkCrawler:
         """Continue a crawl from a committed round snapshot (default:
         latest). Re-execution is deterministic, so resuming from ANY round
         reproduces the uninterrupted run bit-for-bit."""
-        assert self.checkpoint_dir, "resume requires checkpoint_dir"
+        _require(bool(self.checkpoint_dir), "resume requires checkpoint_dir")
         last = from_round if from_round is not None else ckpt.latest_round(self.checkpoint_dir)
-        assert last is not None, "no committed round to resume from"
+        _require(last is not None, "no committed round to resume from")
         state, tables = ckpt.read_round(self.spark, self.checkpoint_dir, last)
         st = {
             "frontier": tables["frontier"],
@@ -675,64 +694,34 @@ class SparkCrawler:
 
     def _seen_build(self, seen: DataFrame):
         cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            return bloommod.build_bloom(
-                seen, capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp
-            )
         if self.seen_filter == "bucketed-bloom":
             return bloommod.build_bucketed_bloom(
                 seen, n_buckets=cfg.seen_n_buckets,
                 capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
             ).localCheckpoint()
-        if self.seen_filter == "cuckoo":
-            return cuckoomod.build_sharded_cuckoo(
-                seen, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity,
-            ).localCheckpoint()
         return None  # exact
 
     def _seen_anti_join(self, eligible: DataFrame, seen: DataFrame, state):
-        cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            return bloommod.bloom_anti_join(eligible, seen, state)
-        if self.seen_filter in ("bucketed-bloom", "cuckoo"):
-            # the sharded forms consume candidates twice (keys-only probe
-            # + final anti-join) and column pruning defeats exchange
-            # reuse — materialize the dedup-agg ONCE here (exact mode
-            # stays lazy: single consumption, checkpoint would be pure
-            # cost — measured 20.9 s lazy vs 34.3 s checkpoint alone at a
-            # 25M-row tier, BASELINE.md round-3 component table)
-            eligible = eligible.localCheckpoint()
-            if self.seen_filter == "bucketed-bloom":
-                return bloommod.bucketed_bloom_anti_join(
-                    eligible, seen, state, n_buckets=cfg.seen_n_buckets
-                )
-            return cuckoomod.cuckoo_anti_join(
-                eligible, seen, state, n_buckets=cfg.seen_n_buckets
+        # exact mode stays lazy: single consumption, a checkpoint would be
+        # pure cost (measured 20.9 s lazy vs 34.3 s checkpoint alone at a
+        # 25M-row tier, BASELINE.md round-3 component table); the bloom
+        # path consumes candidates twice and materializes them itself
+        if self.seen_filter == "bucketed-bloom":
+            return bloommod.bucketed_bloom_anti_join(
+                eligible, seen, state, n_buckets=self.cfg.seen_n_buckets
             )
         return eligible.join(seen, "url_norm", "left_anti")
 
     def _seen_update(self, state, new_frontier: DataFrame):
         """Fold one tier's newly-enqueued URLs into the filter state. The
-        sharded forms merge on the executors (cogroup per bucket) — no
+        shards merge on the executors (cogroup per bucket) — no
         driver-side bitmap ever exists; localCheckpoint keeps the shard
         table's lineage flat across tiers."""
         cfg = self.cfg
-        if self.seen_filter == "broadcast-bloom":
-            extra = bloommod.build_bloom(
-                new_frontier, capacity=cfg.bloom_capacity, fpp=cfg.bloom_fpp
-            )
-            merged = bytes(a | b for a, b in zip(state[0], extra[0]))
-            return (merged, state[1], state[2])
         if self.seen_filter == "bucketed-bloom":
             return bloommod.update_bucketed_bloom(
                 state, new_frontier, n_buckets=cfg.seen_n_buckets,
                 capacity_per_bucket=cfg.seen_bucket_capacity, fpp=cfg.bloom_fpp,
-            ).localCheckpoint()
-        if self.seen_filter == "cuckoo":
-            return cuckoomod.update_sharded_cuckoo(
-                state, new_frontier, n_buckets=cfg.seen_n_buckets,
-                capacity_per_bucket=cfg.seen_bucket_capacity,
             ).localCheckpoint()
         return None
 
@@ -754,7 +743,7 @@ class SparkCrawler:
                 self.tier_chunk_rows is not None
                 and n_frontier > self.tier_chunk_rows
             ):
-                seen_state = self._chunked_tier(st, seen_state, n_frontier)
+                seen_state = self._chunked_tier(st, seen_state)
             else:
                 seen_state = self._tier(st, seen_state)
             if self.checkpoint_dir:
@@ -811,17 +800,19 @@ class SparkCrawler:
             folded=folded,
         )
 
-    def _chunked_tier(self, st: dict, seen_state, n_frontier: int) -> object:
+    def _chunked_tier(self, st: dict, seen_state) -> object:
         """Process one BFS tier as seq-contiguous chunks of
         ≤``tier_chunk_rows`` rows — the heap mitigation for tiers whose
         extraction checkpoint exceeds a single JVM's storage memory.
 
-        Chunk boundaries are ARITHMETIC on discovery_seq: every frontier
-        the crawler builds carries a dense consecutive seq range (seed
-        frontiers dense from 0; enqueue assigns next_seq..next_seq+n-1),
-        so splitting needs one 2-value min/max agg and per-chunk range
-        filters over the already-checkpointed frontier — no sort, no
-        shuffle, no extra materialization.
+        Chunk boundaries are ARITHMETIC on discovery_seq: one 2-value
+        min/max agg, then per-chunk range filters over the
+        already-checkpointed frontier — no sort, no shuffle, no extra
+        materialization. Chunks are sized from the seq SPAN, not the row
+        count: enqueue assigns a dense next_seq..next_seq+n-1 range, but
+        a seed frontier is scope-filtered after its seqs are assigned, so
+        filtered seeds leave gaps — a gap only thins (or empties) a
+        chunk, never grows one past ``tier_chunk_rows``.
 
         Exactness: children of chunk i's parents carry min_parent_seq
         values strictly below chunk i+1's (seq order), which is the
@@ -838,7 +829,7 @@ class SparkCrawler:
             F.max("discovery_seq").alias("hi"),
         ).collect()[0]
         lo, hi = int(b["lo"]), int(b["hi"])
-        n_chunks = -(-n_frontier // self.tier_chunk_rows)
+        n_chunks = -(-(hi - lo + 1) // self.tier_chunk_rows)
         step = -(-(hi - lo + 1) // n_chunks)
         segments: list[DataFrame] = []
         for ci in range(n_chunks):

@@ -5,7 +5,9 @@
 # --py-files at two cluster sizes (N and 4N executors)").
 #
 # The suite's session fixture honors SPARK_GRAFT_TEST_MASTER, so the same
-# tests run against local[8] and local[32] task slots.
+# tests run against local[N] and local[4N] task slots, sized from nproc
+# (N = max(1, nproc/4), so 4N = nproc whenever nproc is a multiple of 4). The crawl benchmark's own tests (crawlbench/tests:
+# the tracer's wrapped-name contract with plans/crawler.py) run afterwards.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -19,10 +21,14 @@ import pytest
 sys.exit(pytest.main(["tests", "-x", "-q"]))
 EOF
 
-for MASTER in 'local[8]' 'local[32]'; do
+N=$(( $(nproc) / 4 > 1 ? $(nproc) / 4 : 1 ))
+for MASTER in "local[$N]" "local[$(( 4 * N ))]"; do
   echo "=== pytest under spark-submit --master $MASTER ==="
   SPARK_GRAFT_TEST_MASTER="$MASTER" SPARK_GRAFT_TEST_SHUFFLE=8 \
   spark-submit --master "$MASTER" --driver-memory 8g \
     --py-files "$ZIP" /tmp/_run_pytest.py
 done
 echo "both cluster sizes: PASS"
+
+echo "=== crawl benchmark tests ==="
+python3 -m pytest crawlbench/tests -q

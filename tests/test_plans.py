@@ -1,4 +1,4 @@
-"""Tests for politeness scheduling, bloom seen-filter, validate pass,
+"""Tests for politeness scheduling, sharded bloom seen-filter, validate pass,
 checkpoint/resume, and robots gating."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from secretscraper_spark.config import CrawlConfig
-from secretscraper_spark.plans import bloom as bloommod
 from secretscraper_spark.plans.crawler import SparkCrawler
 from secretscraper_spark.plans.politeness import (
     assign_fetch_schedule,
@@ -77,39 +76,9 @@ class TestPoliteness:
 
 
 class TestBloom:
-    def test_no_false_negatives(self, spark):
-        seen = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(500)], "url_norm string"
-        )
-        bloom = bloommod.build_bloom(seen, capacity=1000, fpp=0.01)
-        tagged = bloommod.bloom_partition(seen, bloom).collect()
-        assert all(r.bloom_positive for r in tagged)  # every seen url flagged
-
-    def test_bloom_anti_join_exact(self, spark):
-        seen = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(300)], "url_norm string"
-        )
-        cand = spark.createDataFrame(
-            [(f"http://h.test/p/{i}",) for i in range(200, 500)], "url_norm string"
-        )
-        bloom = bloommod.build_bloom(seen, capacity=1000, fpp=0.01)
-        got = {r.url_norm for r in bloommod.bloom_anti_join(cand, seen, bloom).collect()}
-        expected = {f"http://h.test/p/{i}" for i in range(300, 500)}
-        assert got == expected  # identical to plain left_anti
-
-    def test_crawl_with_bloom_matches_exact(self, spark):
-        pdf = generate_pages_pandas(200, 4)
-        site = site_from_pandas(pdf)
-        cfg = CrawlConfig(max_depth=2, max_page_num=0)
-        sim = simulate(site, seeds_for(4), cfg)
-        pages = spark.createDataFrame(pdf.drop(columns=["bytes"]))
-        res = SparkCrawler(spark, pages, cfg, use_bloom=True).run(seeds_for(4))
-        got = {r.url_norm: (r.depth, r.discovery_seq) for r in res.seen.collect()}
-        assert got == sim.seen
-
-    @pytest.mark.parametrize("mode", ["bucketed-bloom", "cuckoo"])
+    @pytest.mark.parametrize("mode", ["bucketed-bloom"])
     def test_crawl_with_sharded_seen_matches_exact(self, spark, mode):
-        """The 10^10-grade sharded seen-set modes wired into SparkCrawler
+        """The 10^10-grade sharded seen-set mode wired into SparkCrawler
         must reproduce the exact-anti-join crawl bit-for-bit (seen set with
         depth+seq, edges, secrets) — the filter only routes rows. Tiny
         per-shard capacity forces real incremental updates + overfill."""
@@ -334,39 +303,17 @@ class TestBucketedBloom:
         assert len(out) == 1  # missing shard ⇒ definitely unseen
 
     def test_lazy_candidates_materialized_once(self, spark):
-        """keys_only_sharded_anti_join consumes candidates twice (probe +
+        """bucketed_bloom_anti_join consumes candidates twice (probe +
         anti-join); a lazy NON-DETERMINISTIC upstream would show the two
         consumptions different row sets, silently dropping/duplicating
-        frontier rows (ADVICE round-3). Pin the in-function guard: a
-        non-leaf plan is localCheckpoint-materialized before the fan-out
-        (consistent output even with rand() upstream), while an
-        already-materialized leaf passes through untouched."""
+        frontier rows (ADVICE round-3). rand()-gated candidates must stay
+        internally consistent: output == exact anti-join of the SAME
+        row set."""
         from pyspark.sql import functions as F
 
         from secretscraper_spark.plans import bloom as bl
 
         seen, cands = self._dfs(spark)
-        # leaf (LocalRelation / checkpointed RDD) → returned as-is
-        leaf = cands.localCheckpoint()
-        assert bl._ensure_consistent_reread(leaf) is leaf
-        # deterministic narrow chain over a stable leaf → pass-through
-        # (ADVICE round-4: re-running a cheap filter twice beats copying
-        # the frame into another MEMORY_AND_DISK checkpoint)
-        cheap = leaf.filter(F.length("url_norm") > 0).select("url_norm")
-        assert bl._ensure_consistent_reread(cheap) is cheap
-        # non-deterministic expression anywhere → materialized to a leaf
-        lazy = cands.filter(F.rand(3) < 2.0)
-        guarded = bl._ensure_consistent_reread(lazy)
-        assert guarded is not lazy
-        assert guarded._jdf.queryExecution().analyzed().children().isEmpty()
-        # expensive deterministic shape (aggregate) → still materialized,
-        # else the scaffold's two consumptions re-run it end-to-end twice
-        agg = cands.groupBy("url_norm").count().drop("count")
-        guarded_agg = bl._ensure_consistent_reread(agg)
-        assert guarded_agg is not agg
-        assert guarded_agg._jdf.queryExecution().analyzed().children().isEmpty()
-        # end-to-end: rand()-gated candidates stay internally consistent —
-        # output == exact anti-join of the SAME materialized row set
         nondet = cands.filter(F.rand(7) < 2.0)  # always true, but nondet-flagged
         blooms = bl.build_bucketed_bloom(seen, n_buckets=8)
         got = {r.url_norm for r in
@@ -374,6 +321,31 @@ class TestBucketedBloom:
         expected = {r.url_norm for r in
                     cands.join(seen, "url_norm", "left_anti").collect()}
         assert got == expected
+
+    def test_udf_candidates_evaluated_once(self, spark):
+        """A lazy candidate frame whose key comes from a Python UDF must
+        run that UDF once per row through the anti-join — not once per
+        consumption (ADVICE round-4: a deterministic UDF projection over
+        a stable leaf used to pass through unmaterialized and run
+        twice)."""
+        from pyspark.sql import functions as F
+
+        from secretscraper_spark.plans import bloom as bl
+
+        seen, cands = self._dfs(spark)
+        calls = spark.sparkContext.accumulator(0)
+
+        @F.udf("string")
+        def counted(u):
+            calls.add(1)
+            return u
+
+        lazy = cands.select(counted("url_norm").alias("url_norm"))
+        blooms = bl.build_bucketed_bloom(seen, n_buckets=8)
+        got = {r.url_norm for r in
+               bl.bucketed_bloom_anti_join(lazy, seen, blooms, n_buckets=8).collect()}
+        assert len(got) == 200
+        assert calls.value == cands.count()
 
     def test_probe_ships_keys_only(self, spark):
         """The Arrow cogroup probe must carry only (key, bucket, hash) —
@@ -386,101 +358,23 @@ class TestBucketedBloom:
         from pyspark.sql import functions as F
 
         from secretscraper_spark.plans import bloom as bl
-        from secretscraper_spark.plans import cuckoo as ck
 
         seen, cands = self._dfs(spark)
         wide = cands.withColumn("payload_col", F.repeat(F.lit("x"), 10))
-        for out in (
-            bl.bucketed_bloom_anti_join(
-                wide, seen, bl.build_bucketed_bloom(seen, n_buckets=8),
-                n_buckets=8,
-            ),
-            ck.cuckoo_anti_join(
-                wide, seen, ck.build_sharded_cuckoo(seen, n_buckets=8),
-                n_buckets=8,
-            ),
-        ):
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            probe_lines = [
-                ln for ln in plan.splitlines()
-                if "FlatMapCoGroupsInPandas" in ln
-            ]
-            assert probe_lines, plan
-            assert all("payload_col" not in ln for ln in probe_lines), plan
-            # and the payload still comes out the other side, via the
-            # JVM anti-join of the untouched candidate rows
-            assert "payload_col" in out.columns
-
-
-class TestCuckoo:
-    def test_shard_membership_and_delete(self):
-        import numpy as np
-
-        from secretscraper_spark.plans.cuckoo import CuckooShard
-
-        shard = CuckooShard(capacity=4096)
-        rng = np.random.default_rng(7)
-        keys = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-        assert shard.insert_hashes(keys) == 0  # all fit at 95% target load
-        assert shard.contains_hashes(keys).all()  # no false negatives
-
-        other = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-        fresh = other[~np.isin(other, keys)]
-        fp_rate = shard.contains_hashes(fresh).mean()
-        assert fp_rate < 0.05  # 16-bit fingerprints → tiny fp rate
-
-        # the bloom filter cannot do this: forget half the keys (TTL expiry)
-        assert shard.delete_hashes(keys[:1000]) == 1000
-        assert shard.contains_hashes(keys[1000:]).all()
-        assert shard.contains_hashes(keys[:1000]).mean() < 0.05
-
-    def test_sharded_anti_join_exact(self, spark):
-        from secretscraper_spark.plans import cuckoo as ck
-
-        seen = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(0, 600, 2)],
-            "url_norm string",
+        out = bl.bucketed_bloom_anti_join(
+            wide, seen, bl.build_bucketed_bloom(seen, n_buckets=8),
+            n_buckets=8,
         )
-        cands = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(600)],
-            "url_norm string",
-        )
-        shards = ck.build_sharded_cuckoo(seen, n_buckets=8, capacity_per_bucket=1024)
-        assert shards.agg({"failed": "sum"}).first()[0] == 0
-        got = {r.url_norm for r in
-               ck.cuckoo_anti_join(cands, seen, shards, n_buckets=8).collect()}
-        expected = {r.url_norm for r in cands.join(seen, "url_norm", "left_anti").collect()}
-        assert got == expected
-        assert len(got) == 300
-
-    def test_failed_shard_routes_to_exact_join(self, spark):
-        """A shard reporting failed inserts is missing fingerprints, so its
-        negatives are untrustworthy — cuckoo_anti_join must route the whole
-        bucket through the exact anti-join (ADVICE r01). Simulated by
-        overwriting the failed count on a real shard table."""
-        from pyspark.sql import functions as F
-
-        from secretscraper_spark.plans import cuckoo as ck
-
-        seen = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(0, 600, 2)],
-            "url_norm string",
-        )
-        cands = spark.createDataFrame(
-            [(f"http://h{i % 5}.test/p/{i}",) for i in range(600)],
-            "url_norm string",
-        )
-        # build the filter from only HALF the seen set (as if the other
-        # half's inserts failed) and stamp failed=1: a trusting filter
-        # would emit the missing half's candidates as definitely-unseen
-        half_seen = seen.limit(150)
-        shards = ck.build_sharded_cuckoo(
-            half_seen, n_buckets=8, capacity_per_bucket=1024
-        ).withColumn("failed", F.lit(1))
-        got = {r.url_norm for r in
-               ck.cuckoo_anti_join(cands, seen, shards, n_buckets=8).collect()}
-        expected = {r.url_norm for r in cands.join(seen, "url_norm", "left_anti").collect()}
-        assert got == expected  # exactness survives a lying filter
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        probe_lines = [
+            ln for ln in plan.splitlines()
+            if "FlatMapCoGroupsInPandas" in ln
+        ]
+        assert probe_lines, plan
+        assert all("payload_col" not in ln for ln in probe_lines), plan
+        # and the payload still comes out the other side, via the
+        # JVM anti-join of the untouched candidate rows
+        assert "payload_col" in out.columns
 
 
 class TestDistributedSeedFrontier:
@@ -530,9 +424,8 @@ class TestShardedSeenExactnessAtScale:
         cand = seen.union(unseen).localCheckpoint()
         return seen, unseen, cand
 
-    def test_bloom_and_cuckoo_zero_false_negatives(self, spark):
+    def test_bucketed_bloom_zero_false_negatives(self, spark):
         from secretscraper_spark.plans import bloom as bl
-        from secretscraper_spark.plans import cuckoo as ck
 
         old = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -548,14 +441,6 @@ class TestShardedSeenExactnessAtScale:
             out_b = bl.bucketed_bloom_anti_join(cand, seen, blooms, n_buckets=16)
             assert out_b.count() == 2000
             assert out_b.join(seen, "url_norm", "inner").count() == 0
-
-            shards = ck.update_sharded_cuckoo(
-                ck.build_sharded_cuckoo(half, n_buckets=16).localCheckpoint(),
-                rest, n_buckets=16,
-            ).localCheckpoint()
-            out_c = ck.cuckoo_anti_join(cand, seen, shards, n_buckets=16)
-            assert out_c.count() == 2000
-            assert out_c.join(seen, "url_norm", "inner").count() == 0
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", old)
 
@@ -875,12 +760,85 @@ class TestSyntheticFetch:
         assert len(chunked.tiers) > len(mono.tiers)
         assert any("chunk" in t for t in chunked.tiers)
         # chunk-grained state folds are refused, not approximated
-        with pytest.raises(AssertionError):
+        with pytest.raises(ValueError):
             SparkCrawler(
                 spark, empty, cfg, fetch_mode="mapped",
                 fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
                 tier_chunk_rows=500, quarantine_fails=2,
             )
+
+    def test_tier_chunking_gapped_seed_frontier(self, spark):
+        """Seed frontiers are scope-filtered AFTER discovery_seq is
+        assigned, so whitelist-filtered seeds leave a gap in the seq
+        range. Chunks are sized from the seq span, so a gap can only
+        thin a chunk — every chunk stays within tier_chunk_rows (sizing
+        from the row count put 134 rows into a 100-row chunk here) and
+        the digests still equal the monolithic run's."""
+        from pyspark.sql import functions as F
+
+        from secretscraper_spark.sources import sitegen as sg
+
+        n_pages, n_hosts, rows = 2000, 8, 100
+        # seqs 0-199 in scope, 200-299 filtered out, 300-399 in scope
+        seeds = [
+            sg.url_for(5 * i, n_hosts) if not 200 <= i < 300
+            else f"http://elsewhere.example/p/{i}"
+            for i in range(400)
+        ]
+        cfg = CrawlConfig(max_depth=1, max_page_num=300, white_list=["*.test"])
+        empty = spark.createDataFrame(
+            [], "url_norm string, status string, content_type string, "
+            "content_length long, caption string",
+        )
+
+        def mk(chunk):
+            return SparkCrawler(
+                spark, empty, cfg, fetch_mode="mapped",
+                fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
+                fold_outputs=True, tier_chunk_rows=chunk,
+            )
+
+        mono = mk(None).run(seeds)
+        chunked = mk(rows).run(seeds)
+
+        def digest(df):
+            row = df.select(
+                F.sum(
+                    F.xxhash64("url_norm", "depth", "discovery_seq")
+                    .cast("decimal(38,0)")
+                ).alias("d")
+            ).collect()[0]
+            return str(row["d"])
+
+        chunks = [t for t in chunked.tiers if "chunk" in t]
+        assert len(chunks) > 1
+        assert all(t["frontier"] <= rows for t in chunks), chunks
+        assert digest(chunked.seen) == digest(mono.seen)
+        assert chunked.folded == mono.folded
+        assert chunked.total_page == mono.total_page == 300
+
+    def test_tier_chunking_refuses_host_proportional_budget(self, spark):
+        """Host-proportional quotas allocated per chunk pick a different
+        page set from the per-tier cut, so chunking refuses that
+        combination under a page budget (without a budget every page is
+        taken and the cut is a no-op)."""
+        from secretscraper_spark.sources import sitegen as sg
+
+        empty = spark.createDataFrame(
+            [], "url_norm string, status string, content_type string, "
+            "content_length long, caption string",
+        )
+
+        def mk(max_page_num):
+            return SparkCrawler(
+                spark, empty, CrawlConfig(max_page_num=max_page_num),
+                fetch_mode="mapped", fetch_map_fn=sg.synthetic_fetch_map(100),
+                tier_chunk_rows=10, budget_mode="host-proportional",
+            )
+
+        with pytest.raises(ValueError, match="host-proportional"):
+            mk(50)
+        assert mk(0).tier_chunk_rows == 10
 
     def test_tier_chunking_resume_parity(self, spark, tmp_path):
         """Chunked tiers × checkpoint-resume: snapshots land once per

@@ -72,15 +72,15 @@ def test_quarantine_validation(spark):
     pages = _degraded_pages(spark)
     cfg = CrawlConfig(max_depth=1, max_page_num=0)
     # 0 would quarantine all-success hosts (0 >= 0)
-    with pytest.raises(AssertionError, match="quarantine_fails"):
+    with pytest.raises(ValueError, match="quarantine_fails"):
         SparkCrawler(spark, pages, cfg, quarantine_fails=0)
     # cooldown 0 expires every quarantine before its first gated tier
-    with pytest.raises(AssertionError, match="cooldown"):
+    with pytest.raises(ValueError, match="cooldown"):
         SparkCrawler(
             spark, pages, cfg, quarantine_fails=2, quarantine_cooldown_tiers=0
         )
     # cooldown without a threshold is a silent no-op otherwise
-    with pytest.raises(AssertionError, match="cooldown"):
+    with pytest.raises(ValueError, match="cooldown"):
         SparkCrawler(spark, pages, cfg, quarantine_cooldown_tiers=2)
 
 

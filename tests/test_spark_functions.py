@@ -18,11 +18,19 @@ from secretscraper_spark.functions.exprs import (
     status_allowed,
 )
 from secretscraper_spark.functions.extract import (
-    make_links_udf,
+    make_extract_udf,
     make_parse_url_udf,
     make_secrets_udf,
-    title_udf,
 )
+
+
+def _extract(df):
+    """make_extract_udf over (scheme, netloc, caption) with the link gate
+    open — the crawler's one extraction pass."""
+    udf = make_extract_udf(url_finder_rules(), loaded_rules())
+    return df.select(
+        udf("scheme", "netloc", "caption", F.lit(True)).alias("ex")
+    )
 
 
 def test_secrets_udf(spark, planted_text):
@@ -43,7 +51,7 @@ def test_links_udf(spark, html_text):
         [("http", "site0.test", html_text)], "scheme string, netloc string, caption string"
     )
     rows = (
-        df.select(F.explode(make_links_udf(url_finder_rules())("scheme", "netloc", "caption")).alias("c"))
+        _extract(df).select(F.explode("ex.children").alias("c"))
         .select("c.url_norm")
         .collect()
     )
@@ -69,8 +77,11 @@ def test_parse_url_udf(spark):
 
 
 def test_title_udf(spark):
-    df = spark.createDataFrame([("<title>A</title><title>B</title>",)], "caption string")
-    assert df.select(title_udf("caption").alias("t")).first().t == "A|B"
+    df = spark.createDataFrame(
+        [("http", "h.test", "<title>A</title><title>B</title>")],
+        "scheme string, netloc string, caption string",
+    )
+    assert _extract(df).select("ex.title").first().title == "A|B"
 
 
 def test_static_and_dangerous_exprs(spark):
