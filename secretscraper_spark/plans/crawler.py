@@ -3,11 +3,13 @@
 Re-expresses the reference's asyncio loop (crawler.py:175-217, 268-303,
 336-381) as one Spark job per depth tier:
 
-    frontier(d) ─ robots gate ─ evade-filter ─ sort/limit(budget)
-        ─ politeness schedule ─► fetch join(pages)
+    frontier(d) ─ robots gate ─ evade-filter ─ quarantine gate
+        ─ sort/limit(budget) ─ politeness makespan
+        ─► per seq-contiguous chunk: fetch join(pages)
         ├─► secrets UDF  ─► secrets append
         └─► links UDF ─► explode ─► edges append
                          └─► filter chain ─► anti-join(seen) ─► frontier(d+1)
+        ─► tier end: quarantine + AIMD folds over the chunks' host outcomes
 
 Scale design (10^10 frontier / 1000 executors):
 - fetch = hash join frontier⋈pages on xxhash64(url_norm); AQE picks
@@ -22,6 +24,11 @@ Scale design (10^10 frontier / 1000 executors):
 - politeness: per-host virtual-time schedule (plans/politeness.py); the
   tier makespan is recorded in the metrics, and the hot-host rate budget —
   not Spark — is the throughput floor it exposes.
+- one tier path: gates, budget cut, makespan and the trap hot-prefix set
+  run once per tier; only fetch → enqueue runs per chunk (tier_chunk_rows
+  bounds a chunk's extraction checkpoint on a single JVM), and the
+  quarantine/AIMD folds run once per tier over the chunks' per-host
+  outcomes — chunked runs are bit-identical to unchunked ones.
 - per-tier localCheckpoint truncates lineage; checkpoint_dir writes
   parquet round snapshots + manifest for resume (plans/checkpoint.py).
 """
@@ -30,8 +37,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..config import CrawlConfig, loaded_rules, url_finder_rules
 from ..functions import purekit as pk
@@ -46,8 +54,10 @@ from ..functions.extract import make_extract_udf
 from ..schemas import EDGES_SCHEMA, FRONTIER_SCHEMA, SECRETS_SCHEMA
 from . import bloom as bloommod
 from . import checkpoint as ckpt
-from . import extraction
+from . import extraction, traps
 from .politeness import (
+    adapt_crawl_delay,
+    allocate_host_budget,
     assign_fetch_schedule,
     robots_gate,
     tier_makespan,
@@ -68,6 +78,8 @@ QUARANTINE_DDL = "host string, n_fails long, quarantined_at int"
 #: AIMD adaptive-politeness state (adaptive_delay mode): the per-host
 #: crawl delay carried across tiers
 DELAYS_DDL = "host string, crawl_delay double"
+
+URL_PART_COLS = ["scheme", "netloc", "path", "params", "query", "fragment"]
 
 
 @dataclass
@@ -90,11 +102,48 @@ class CrawlResult:
     folded: dict | None = None
 
 
+@dataclass
+class LoopState:
+    """The tier loop's state between tiers. The frames are what
+    ``_snapshot`` writes per round and ``resume()`` reads back."""
+
+    frontier: DataFrame
+    seen: DataFrame
+    nodes: DataFrame
+    edges: DataFrame
+    secrets: DataFrame
+    host_fails: DataFrame
+    host_delays: DataFrame
+    depth: int = 0
+    total_page: int = 0
+    next_seq: int = 0
+    tiers: list[dict] = field(default_factory=list)
+    #: legs of the lazy seen union since it was last flattened
+    seen_segments: int = 1
+    #: the seen filter's executor-side state (None in 'exact' mode)
+    seen_filter: object = None
+    overhead: dict = field(default_factory=dict)
+
+
 def _require(ok: bool, msg: str) -> None:
     """Refuse a config that would silently diverge. ValueError, not
     assert: ``python -O`` strips asserts."""
     if not ok:
         raise ValueError(msg)
+
+
+def _phase_clock(phase_t: dict):
+    """mark(name) records the seconds since the previous mark (or since
+    this call) into *phase_t*."""
+    last = time.perf_counter()
+
+    def mark(name: str) -> None:
+        nonlocal last
+        now = time.perf_counter()
+        phase_t[name] = round(now - last, 3)
+        last = now
+
+    return mark
 
 
 def _accept_expr(cfg: CrawlConfig):
@@ -105,31 +154,48 @@ def _accept_expr(cfg: CrawlConfig):
     )
 
 
+def _rank_seeds(firsts: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Unique seeds (ord, url_norm, URL parts) → depth-0 frontier: the
+    scope filter first, then discovery_seq dense from 0 in ord order over
+    the seeds it accepts — the reference numbers only enqueued seeds
+    (crawler.py:180-187, refsim.simulate)."""
+    ranked = assign_global_seq(
+        firsts.filter(_accept_expr(cfg)), ["ord"], seq_col="discovery_seq"
+    )
+    return ranked.select(
+        "url_norm", *URL_PART_COLS,
+        F.lit(0).alias("depth"),
+        F.lit(None).cast("string").alias("parent_norm"),
+        "discovery_seq",
+    )
+
+
 def seed_frontier(
     spark: SparkSession, seeds: list[str], cfg: CrawlConfig,
     distributed_threshold: int = 10_000,
 ) -> DataFrame:
-    """S1 seed source: parse, filter, dedup (keep first), seq by insertion
+    """S1 seed source: parse, dedup (keep first), filter, seq by insertion
     order (reference facade.py:176-192 + crawler.py:180-187).
 
-    Above *distributed_threshold* seeds the parse/dedup/rank moves onto the
+    Above *distributed_threshold* seeds the parse/dedup moves onto the
     executors (the driver-side Python loop over a 10^6-seed list is pure
     serial time and caps scaling efficiency); the two paths are
-    parity-tested identical, including the quirk that discovery_seq is
-    assigned over ALL unique norms before the scope filter runs (filtered
-    seeds leave gaps in the sequence)."""
+    parity-tested identical."""
     if len(seeds) <= distributed_threshold:
-        rows, seen_norm, seq = [], set(), 0
+        rows, seen_norm = [], set()
         for url in dict.fromkeys(seeds):
             t6 = pk.parse6(url)
             norm = pk.unparse6(t6)
             if norm in seen_norm:
                 continue
             seen_norm.add(norm)
-            rows.append((norm, *t6, 0, None, seq))
-            seq += 1
-        df = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        return df.filter(_accept_expr(cfg))
+            rows.append((len(rows), norm, *t6))
+        firsts = spark.createDataFrame(
+            rows,
+            "ord long, url_norm string, "
+            + ", ".join(f"{c} string" for c in URL_PART_COLS),
+        )
+        return _rank_seeds(firsts, cfg)
 
     base = spark.createDataFrame(
         list(enumerate(seeds)), "ord long, url string"
@@ -145,37 +211,30 @@ def seed_frontier_from_urls(
     the driver as a Python list. *urls* carries (ord long, url string);
     ord is the insertion order the reference's seed-list semantics key on
     (facade.py:176-192). Semantics are identical to seed_frontier(list):
-    first occurrence per normalized url wins, discovery_seq is assigned
-    over ALL unique norms before the scope filter runs."""
+    first occurrence per normalized url wins, then the scope filter, then
+    discovery_seq over the accepted seeds."""
     from ..functions.extract import make_parse_url_udf
 
-    part_cols = ["scheme", "netloc", "path", "params", "query", "fragment"]
     parsed = urls.select(
         "ord", make_parse_url_udf()(F.col("url")).alias("p")
     ).select("ord", "p.*")
     # first occurrence per norm wins (insertion order = ord)
     firsts = parsed.groupBy("url_norm").agg(
         F.min("ord").alias("ord"),
-        *[F.min_by(c, "ord").alias(c) for c in part_cols],
+        *[F.min_by(c, "ord").alias(c) for c in URL_PART_COLS],
     )
-    ranked = assign_global_seq(firsts, ["ord"], seq_col="discovery_seq")
-    df = ranked.select(
-        "url_norm", *part_cols,
-        F.lit(0).alias("depth"),
-        F.lit(None).cast("string").alias("parent_norm"),
-        "discovery_seq",
-    )
-    return df.filter(_accept_expr(cfg))
+    return _rank_seeds(firsts, cfg)
 
 
 class SparkCrawler:
     """Driver-side BFS orchestration; all data-parallel work is DataFrame ops."""
 
-    #: fold-mode GC nudge fires only after tiers at least this big: a
-    #: forced full GC on a decade-leg heap (80 g) stalls multi-seconds,
-    #: which only pays when the just-released tier's blocks are a
-    #: meaningful heap fraction (ADVICE round-4). Small tiers are left to
-    #: ContextCleaner's ordinary reference-queue reclamation.
+    #: fold-mode GC nudge fires after an unsplit tier only when it is at
+    #: least this big: a forced full GC on a decade-leg heap (80 g) stalls
+    #: multi-seconds, which only pays when the just-released tier's
+    #: blocks are a meaningful heap fraction (ADVICE round-4). Small
+    #: tiers are left to ContextCleaner's ordinary reference-queue
+    #: reclamation; split tiers nudge after every chunk.
     GC_NUDGE_MIN_TIER_ROWS = 2_000_000
 
     def __init__(
@@ -185,7 +244,6 @@ class SparkCrawler:
         cfg: CrawlConfig | None = None,
         robots: DataFrame | None = None,
         checkpoint_dir: str | None = None,
-        schedule_politeness: bool = True,
         fetch_mode: str = "join",
         page_fetch_fn=None,
         seen_filter: str = "exact",
@@ -274,7 +332,16 @@ class SparkCrawler:
         unchanged — e2e outputs stay reference-parity), and is
         checkpointed with the round snapshot like the breaker state.
         Latency-based backoff stays inert in the sandbox (no wall-clock
-        latencies in join mode; stats carry latency_ms=0)."""
+        latencies in join mode; stats carry latency_ms=0).
+
+        tier_chunk_rows (None = whole tiers) runs each tier's fetch →
+        enqueue in seq-contiguous chunks of at most that many rows — the
+        single-JVM heap mitigation for ≥5·10^7-row tiers (BASELINE.md: a
+        51 M-row tier's localCheckpoint OOMed a 48 g driver). The gates,
+        budget cut, politeness makespan, trap hot-prefix set and the
+        quarantine/AIMD folds stay tier-grained, so a chunked run is
+        bit-identical to the unchunked one with any other knob (see
+        _chunked_tier)."""
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
         self.robots = robots
@@ -285,7 +352,6 @@ class SparkCrawler:
         )
         self.seen_filter = seen_filter
         self.checkpoint_dir = checkpoint_dir
-        self.schedule_politeness = schedule_politeness
         _require(
             fetch_mode in ("join", "paced", "mapped"),
             f"fetch_mode must be 'join', 'paced' or 'mapped', "
@@ -319,36 +385,10 @@ class SparkCrawler:
             f"got {budget_mode!r}",
         )
         self.budget_mode = budget_mode
-        # tier_chunk_rows: split any BFS tier bigger than this into
-        # seq-contiguous sub-tiers processed back-to-back at the same
-        # depth — the single-JVM heap mitigation for ≥5·10^7-row tiers
-        # (BASELINE.md: a 51 M-row tier's localCheckpoint OOMed a 48 g
-        # driver). EXACT for the scale-leg configuration: the enqueue
-        # rank's key is (min_parent_seq, url_norm) and chunking follows
-        # discovery_seq order, so children of earlier chunks sort before
-        # later chunks' and a child linked from several chunks keeps its
-        # earliest parent — discovery_seq, seen, and fold digests are
-        # bit-identical to the monolithic tier (test_tier_chunking_*).
-        # Per-tier STATE folds (quarantine, AIMD, traps) and the
-        # host-proportional budget cut would observe chunk-grained
-        # instead of tier-grained data, so chunking refuses those
-        # combinations rather than silently approximating.
-        if tier_chunk_rows is not None:
-            _require(tier_chunk_rows >= 1, "tier_chunk_rows must be >= 1")
-            _require(
-                quarantine_fails is None
-                and not adaptive_delay
-                and trap_cap is None,
-                "tier_chunk_rows changes the granularity quarantine/AIMD/"
-                "trap folds observe — run those tier-grained features "
-                "unchunked",
-            )
-            _require(
-                budget_mode == "bfs" or self.cfg.max_page_num <= 0,
-                "tier_chunk_rows with budget_mode='host-proportional' and "
-                "a page budget allocates host quotas per chunk, not per "
-                "tier — a different page set from the unchunked run",
-            )
+        _require(
+            tier_chunk_rows is None or tier_chunk_rows >= 1,
+            "tier_chunk_rows must be >= 1",
+        )
         self.tier_chunk_rows = tier_chunk_rows
         self.trap_cap = trap_cap
         self.trap_prefix_depth = trap_prefix_depth
@@ -376,17 +416,17 @@ class SparkCrawler:
         # fetch_ttl set, responses persist on this instance ACROSS run()
         # calls — a recrawl serves fresh rows from cache and fetches only
         # stale/missing ones. clock is injectable for deterministic tests.
-        import time as _time
-
         self.fetch_ttl = fetch_ttl
-        self._clock = clock or _time.time
-        # per-tier (url_norm, latency_ms) of paced-mode FAILED fetches —
-        # set by _do_fetch when adaptive_delay is on, consumed by the
-        # AIMD fold (join-mode misses carry no measured latency)
+        self._clock = clock or time.time
+        # per-chunk (url_norm, latency_ms) of paced-mode FAILED fetches —
+        # set by _do_fetch when adaptive_delay is on, consumed by
+        # _host_outcomes (join-mode misses carry no measured latency)
         self._tier_fail_latency = None
-        self.fetch_cache = (
-            self._empty_cache(spark) if fetch_ttl is not None else None
-        )
+        self.fetch_cache = None
+        if fetch_ttl is not None:
+            from .fetch_cache import CACHE_DDL
+
+            self.fetch_cache = spark.createDataFrame([], CACHE_DDL)
         # pre-project the fetch side once; url_hash join key for cheap
         # shuffle. A STORED url_hash (sources/pages_store.py bucketed
         # store) is kept rather than recomputed: recomputing would orphan
@@ -454,12 +494,14 @@ class SparkCrawler:
         carrying the full FRONTIER_SCHEMA columns — the Iceberg-snapshot
         shape (resume() enters the loop from exactly this table read back
         from a round snapshot). The CALLER guarantees url_norm is
-        normalized + unique and discovery_seq is dense from 0 — the
-        contract every frontier table the crawler itself writes satisfies.
-        For raw url lists/tables use run()/run_from_urls(), which
-        normalize + dedup + rank first. Skipping those jobs is the point:
-        a prepared 10^10-row frontier pays zero per-run seed cost beyond
-        one materialization. Parity-tested against run()."""
+        normalized + unique and discovery_seq is unique — the contract
+        every frontier table the crawler itself writes satisfies. Rows
+        the scope filter drops leave gaps in discovery_seq; enqueue
+        numbering continues from max(discovery_seq) + 1. For raw url
+        lists/tables use run()/run_from_urls(), which normalize + dedup +
+        rank first. Skipping those jobs is the point: a prepared
+        10^10-row frontier pays zero per-run seed cost beyond one
+        materialization. Parity-tested against run()."""
         return self._run_seeded(
             lambda: frontier.filter(_accept_expr(self.cfg))
         )
@@ -468,20 +510,14 @@ class SparkCrawler:
         t_seed = time.perf_counter()
         frontier = build_frontier().localCheckpoint()
         seen = frontier.select("url_norm", "depth", "discovery_seq").localCheckpoint()
-        st = {
-            "frontier": frontier,
-            "seen": seen,
-            "nodes": self._empty(NODES_DDL),
-            "edges": self._empty(EDGES_SCHEMA),
-            "secrets": self._empty(SECRETS_SCHEMA),
-            "depth": 0,
-            "total_page": 0,
-            "next_seq": frontier.count(),
-            "tiers": [],
-            "host_fails": self._empty(QUARANTINE_DDL),
-            "host_delays": self._empty(DELAYS_DDL),
-        }
-        st["overhead"] = {"seed_sec": round(time.perf_counter() - t_seed, 3)}
+        # max + 1, not the row count: scope-filtered rows of a prebuilt
+        # frontier leave seq gaps, and a count would reuse their seqs
+        hi = frontier.agg(F.max("discovery_seq")).first()[0]
+        st = self._state(
+            {"frontier": frontier, "seen": seen},
+            next_seq=0 if hi is None else int(hi) + 1,
+        )
+        st.overhead["seed_sec"] = round(time.perf_counter() - t_seed, 3)
         return self._loop(st)
 
     def resume(self, from_round: int | None = None) -> CrawlResult:
@@ -492,31 +528,34 @@ class SparkCrawler:
         last = from_round if from_round is not None else ckpt.latest_round(self.checkpoint_dir)
         _require(last is not None, "no committed round to resume from")
         state, tables = ckpt.read_round(self.spark, self.checkpoint_dir, last)
-        st = {
-            "frontier": tables["frontier"],
-            "seen": tables["seen"],
-            "nodes": tables.get("nodes", self._empty(NODES_DDL)),
-            "edges": tables.get("edges", self._empty(EDGES_SCHEMA)),
-            "secrets": tables.get("secrets", self._empty(SECRETS_SCHEMA)),
-            "depth": state.depth + 1,
-            "total_page": state.total_page,
-            "next_seq": state.next_seq,
-            "tiers": list(state.tiers),
-            "host_fails": tables.get(
-                "host_fails", self._empty(QUARANTINE_DDL)
-            ),
-            "host_delays": tables.get(
-                "host_delays", self._empty(DELAYS_DDL)
-            ),
-            # seen starts as one parquet leaf (see _snapshot's reset)
-            "seen_segments": 1,
-        }
-        return self._loop(st)
+        return self._loop(self._state(
+            tables,
+            depth=state.depth + 1,
+            total_page=state.total_page,
+            next_seq=state.next_seq,
+            tiers=list(state.tiers),
+        ))
 
     # -- internals ------------------------------------------------------------
 
     def _empty(self, schema) -> DataFrame:
         return self.spark.createDataFrame([], schema)
+
+    def _state(self, tables: dict[str, DataFrame], **kw) -> LoopState:
+        """Loop state over *tables* (frontier and seen required); the
+        accumulated outputs and per-host state start empty when absent."""
+        empty = {
+            "nodes": NODES_DDL, "edges": EDGES_SCHEMA,
+            "secrets": SECRETS_SCHEMA, "host_fails": QUARANTINE_DDL,
+            "host_delays": DELAYS_DDL,
+        }
+        frames = {
+            k: tables[k] if k in tables else self._empty(schema)
+            for k, schema in empty.items()
+        }
+        return LoopState(
+            frontier=tables["frontier"], seen=tables["seen"], **frames, **kw
+        )
 
     def _scale_ckpt(self, df: DataFrame) -> DataFrame:
         """localCheckpoint for the per-tier BIG frames (extraction
@@ -544,12 +583,6 @@ class SparkCrawler:
             )
         return df.localCheckpoint()
 
-    @staticmethod
-    def _empty_cache(spark: SparkSession) -> DataFrame:
-        from .fetch_cache import CACHE_DDL
-
-        return spark.createDataFrame([], CACHE_DDL)
-
     def _host_proportional_cut(
         self, candidates: DataFrame, remaining: int
     ) -> DataFrame:
@@ -558,11 +591,6 @@ class SparkCrawler:
         BFS discovery order. One demand agg + the allocator's rank + a
         per-host row_number window (hosts are plentiful — no single-task
         stage) + a host-dim join AQE is free to broadcast."""
-        from pyspark.sql import Window
-
-        from ..functions.exprs import host_of
-        from .politeness import allocate_host_budget
-
         cand = candidates.withColumn("__bhost", host_of(F.col("netloc")))
         demands = cand.groupBy(F.col("__bhost").alias("host")).agg(
             F.count(F.lit(1)).alias("demand")
@@ -582,6 +610,7 @@ class SparkCrawler:
         """One tier's fetch: frontier rows → frontier cols + page cols
         (status, content_type, content_length, caption). *tier_rows* is an
         upper bound on the row count, used for the broadcast decision."""
+        self._tier_fail_latency = None
         if self.fetch_mode == "mapped":
             # in-plan fetch transform (see __init__): lazy, fuses into
             # the extraction stage — so parallelism = the FRONTIER's
@@ -592,7 +621,6 @@ class SparkCrawler:
             # task (measured 45.9 s vs 4 s for a 208k-row tier). Fan a
             # too-coarse frontier out to 2× slots first; big tiers take
             # the distributed rank path and already arrive wide.
-            self._tier_fail_latency = None
             target = self.spark.sparkContext.defaultParallelism * 2
             if to_process.rdd.getNumPartitions() < target:
                 to_process = to_process.repartition(target)
@@ -624,7 +652,6 @@ class SparkCrawler:
                         "content_length", "caption", "latency_ms")
                 .join(to_process, "url_norm")
             )
-        self._tier_fail_latency = None
         # sandbox scan: hash join vs the pages store. The frontier tier
         # is broadcast while it fits (deterministic plan, no pages
         # shuffle); a 10^8-row tier at real scale exceeds any broadcast
@@ -643,12 +670,46 @@ class SparkCrawler:
             self.pages, ["url_hash", "url_norm"], "inner"
         ).drop("url_hash")
 
+    def _host_outcomes(self, chunk: DataFrame, combined: DataFrame) -> DataFrame:
+        """(host, fetched, ok, latency_ms) per scheduled URL of one chunk
+        — the input of the breaker and AIMD folds. A miss (join mode: not
+        in the pages store; paced: fetch_fn error arm) has fetched = ok =
+        False; ok also excludes 5xx/429. latency_ms is the paced
+        executor's measurement, failed fetches included (a timeout is a
+        host's largest latency), else 0. Empty hosts (relative-href
+        children, unparseable authorities) are dropped rather than pooled
+        into one '' key. Checkpointed, so the tier-end union holds no
+        reference to the chunk's extraction checkpoint."""
+        status = F.col("status").cast("string")
+        ok = ~((status == "Unknown") | status.startswith("5") | (status == "429"))
+        latency = (
+            F.coalesce("latency_ms", F.lit(0.0))
+            if "latency_ms" in combined.columns
+            else F.lit(0.0)
+        )
+        hits = with_host(combined).select(
+            "host", F.lit(True).alias("fetched"), ok.alias("ok"),
+            latency.alias("latency_ms"),
+        )
+        misses = (
+            with_host(chunk)
+            .select("host", "url_norm")
+            .join(combined.select("url_norm"), "url_norm", "left_anti")
+        )
+        miss_latency = F.lit(0.0)
+        if self._tier_fail_latency is not None:
+            misses = misses.join(self._tier_fail_latency, "url_norm", "left")
+            miss_latency = F.coalesce("latency_ms", F.lit(0.0))
+        misses = misses.select(
+            "host", F.lit(False).alias("fetched"), F.lit(False).alias("ok"),
+            miss_latency.alias("latency_ms"),
+        )
+        return (
+            hits.unionByName(misses).filter(F.col("host") != "").localCheckpoint()
+        )
+
     def _quarantine_fold(
-        self,
-        state: DataFrame,
-        ok_counts: DataFrame,
-        fail_counts: DataFrame,
-        depth: int,
+        self, state: DataFrame, outcomes: DataFrame, depth: int
     ) -> DataFrame:
         """One tier's host outcomes folded into the breaker state (see
         __init__ doc). Tier-batch time: any success this tier resets the
@@ -660,7 +721,10 @@ class SparkCrawler:
         hosts)."""
         thr = int(self.quarantine_fails)
         c = self.quarantine_cooldown_tiers
-        tier = ok_counts.join(fail_counts, "host", "full_outer")
+        tier = outcomes.groupBy("host").agg(
+            F.count_if(F.col("fetched")).alias("n_ok"),
+            F.count_if(~F.col("fetched")).alias("n_fail"),
+        )
         merged = state.select(
             "host",
             F.col("n_fails").alias("old_n"),
@@ -725,51 +789,26 @@ class SparkCrawler:
             ).localCheckpoint()
         return None
 
-    def _loop(self, st: dict) -> CrawlResult:
+    def _loop(self, st: LoopState) -> CrawlResult:
         cfg = self.cfg
         t_sb = time.perf_counter()
-        seen_state = self._seen_build(st["seen"])
-        overhead = st.get("overhead", {})
-        overhead["seen_build_sec"] = round(time.perf_counter() - t_sb, 3)
+        st.seen_filter = self._seen_build(st.seen)
+        st.overhead["seen_build_sec"] = round(time.perf_counter() - t_sb, 3)
         while True:
-            if cfg.max_depth > 0 and st["depth"] > cfg.max_depth:
+            if cfg.max_depth > 0 and st.depth > cfg.max_depth:
                 break
-            if cfg.max_page_num > 0 and st["total_page"] >= cfg.max_page_num:
+            if cfg.max_page_num > 0 and st.total_page >= cfg.max_page_num:
                 break
-            n_frontier = st["frontier"].count()
-            if n_frontier == 0:
+            if not self._chunked_tier(st):
                 break
-            if (
-                self.tier_chunk_rows is not None
-                and n_frontier > self.tier_chunk_rows
-            ):
-                seen_state = self._chunked_tier(st, seen_state)
-            else:
-                seen_state = self._tier(st, seen_state)
             if self.checkpoint_dir:
                 self._snapshot(st)
-            if (
-                self.fold_outputs
-                and st["tiers"]
-                and st["tiers"][-1]["processed"] >= self.GC_NUDGE_MIN_TIER_ROWS
-            ):
-                # the previous tier's extraction checkpoint is now
-                # unreferenced (digests folded, no lazy union holds it) —
-                # nudge the JVM so ContextCleaner releases its blocks
-                # before the next tier grows; keeps peak storage O(one
-                # tier) instead of O(crawl). Gated on tier size (ADVICE
-                # round-4): a forced FULL GC on the 80 g heap the decade
-                # legs run with stalls multi-seconds, which only pays for
-                # itself when the freed tier is big enough to matter —
-                # small tiers' blocks are reclaimed by ContextCleaner's
-                # ordinary reference-queue pass anyway.
-                self.spark.sparkContext._jvm.System.gc()
-            st["depth"] += 1
+            st.depth += 1
 
         folded = None
         if self.fold_outputs:
             acc: dict[str, dict] = {}
-            for t in st["tiers"]:
+            for t in st.tiers:
                 for name, v in t.get("fold", {}).items():
                     a = acc.setdefault(name, {"digest": 0, "rows": 0})
                     a["digest"] += v["digest"]
@@ -779,40 +818,42 @@ class SparkCrawler:
                 for k, v in acc.items()
             }
         return CrawlResult(
-            nodes=st["nodes"],
-            edges=st["edges"].dropDuplicates(["parent_norm", "child_norm", "kind"]),
-            secrets=st["secrets"].dropDuplicates(["url_norm", "rule_name", "match"]),
-            seen=st["seen"],
+            nodes=st.nodes,
+            edges=st.edges.dropDuplicates(["parent_norm", "child_norm", "kind"]),
+            secrets=st.secrets.dropDuplicates(["url_norm", "rule_name", "match"]),
+            seen=st.seen,
             # found_urls ≡ the distinct children ever extracted — exactly
             # the edge targets, so it is derived instead of accumulated
             # (zero extra extraction passes; crawler.py:364-376 adds every
             # child to a dict AND found_urls together)
-            found=st["edges"].select(
+            found=st.edges.select(
                 F.col("child_norm").alias("url_norm")
             ).distinct(),
-            total_page=st["total_page"],
-            tiers=st["tiers"],
-            overhead=overhead,
-            host_delays=st["host_delays"] if self.adaptive_delay else None,
+            total_page=st.total_page,
+            tiers=st.tiers,
+            overhead=st.overhead,
+            host_delays=st.host_delays if self.adaptive_delay else None,
             host_fails=(
-                st["host_fails"] if self.quarantine_fails is not None else None
+                st.host_fails if self.quarantine_fails is not None else None
             ),
             folded=folded,
         )
 
-    def _chunked_tier(self, st: dict, seen_state) -> object:
-        """Process one BFS tier as seq-contiguous chunks of
-        ≤``tier_chunk_rows`` rows — the heap mitigation for tiers whose
-        extraction checkpoint exceeds a single JVM's storage memory.
+    def _chunked_tier(self, st: LoopState) -> bool:
+        """Run one BFS tier; False when the frontier is empty.
 
-        Chunk boundaries are ARITHMETIC on discovery_seq: one 2-value
-        min/max agg, then per-chunk range filters over the
-        already-checkpointed frontier — no sort, no shuffle, no extra
-        materialization. Chunks are sized from the seq SPAN, not the row
-        count: enqueue assigns a dense next_seq..next_seq+n-1 range, but
-        a seed frontier is scope-filtered after its seqs are assigned, so
-        filtered seeds leave gaps — a gap only thins (or empties) a
-        chunk, never grows one past ``tier_chunk_rows``.
+        Once per tier: frontier count, robots → evade → quarantine gate
+        (tier-start host_fails), budget cut, trap hot-prefix set
+        (tier-start seen). Then ``_tier`` runs fetch → enqueue per
+        seq-contiguous chunk of to_process (one chunk unless
+        tier_chunk_rows is set and smaller); the breaker/AIMD folds run
+        once over all chunks' outcomes, and the politeness makespan over
+        to_process with the tier-start host_delays — every tier-grained
+        feature sees the same data at any chunk size.
+
+        Chunk boundaries are ARITHMETIC on to_process's discovery_seq
+        span: range filters, no sort, no extra materialization. A gap in
+        the span only thins a chunk; empty chunks are skipped.
 
         Exactness: children of chunk i's parents carry min_parent_seq
         values strictly below chunk i+1's (seq order), which is the
@@ -822,67 +863,22 @@ class SparkCrawler:
         earliest chunk (later chunks' anti-join drops it — same winner
         as the monolithic min(parent_seq) tiebreak). Peak storage drops
         from O(tier) to O(chunk): each chunk's extraction checkpoint is
-        released (fold mode) before the next begins."""
-        full = st["frontier"]
-        b = full.agg(
-            F.min("discovery_seq").alias("lo"),
-            F.max("discovery_seq").alias("hi"),
-        ).collect()[0]
-        lo, hi = int(b["lo"]), int(b["hi"])
-        n_chunks = -(-(hi - lo + 1) // self.tier_chunk_rows)
-        step = -(-(hi - lo + 1) // n_chunks)
-        segments: list[DataFrame] = []
-        for ci in range(n_chunks):
-            if (
-                self.cfg.max_page_num > 0
-                and st["total_page"] >= self.cfg.max_page_num
-            ):
-                break
-            c_lo = lo + ci * step
-            if c_lo > hi:
-                break
-            st["frontier"] = full.filter(
-                (F.col("discovery_seq") >= c_lo)
-                & (F.col("discovery_seq") < min(c_lo + step, hi + 1))
-            )
-            seen_state = self._tier(st, seen_state)
-            st["tiers"][-1]["chunk"] = ci
-            segments.append(st["frontier"])  # this chunk's new_frontier
-            if self.fold_outputs:
-                # UNCONDITIONAL per-chunk nudge (no GC_NUDGE_MIN_TIER_ROWS
-                # gate): chunking is chosen exactly when heap is the
-                # binding constraint, and ContextCleaner only releases a
-                # chunk's checkpoint blocks after a GC enqueues its weak
-                # refs — the default periodic GC is 30 min away, so
-                # without the nudge freed chunks pile up and the run OOMs
-                # unrolling the next one (round-5 constrained-heap legs)
-                self.spark.sparkContext._jvm.System.gc()
-        nf = segments[0] if segments else self._empty(FRONTIER_SCHEMA)
-        for s in segments[1:]:
-            nf = nf.unionByName(s)
-        # each segment is already a checkpointed leaf, so the union is a
-        # flat read — same shape as the seen-segments accumulation
-        st["frontier"] = nf
-        return seen_state
+        released (fold mode) before the next begins.
 
-    def _tier(self, st: dict, seen_state) -> object:
-        cfg, depth = self.cfg, st["depth"]
-        phase_t: dict[str, float] = {}
-        _last = time.perf_counter()
-
-        def mark(name: str) -> None:
-            nonlocal _last
-            now = time.perf_counter()
-            phase_t[name] = round(now - _last, 3)
-            _last = now
-
-        frontier = st["frontier"]
-        n_frontier = frontier.count()
+        Records: one per chunk, tagged ``chunk`` when the tier splits;
+        the tier's frontier count, makespan and tier-grained phases go on
+        its first (0 / None / absent on the rest)."""
+        cfg, depth = self.cfg, st.depth
+        phases: dict[str, float] = {}
+        mark = _phase_clock(phases)
+        n_frontier = st.frontier.count()
         mark("count_frontier")
+        if n_frontier == 0:
+            return False
 
         # C5 robots gate (north-rule addition; excluded like evade: no fetch,
         # no budget)
-        candidates = frontier
+        candidates = st.frontier
         if self.robots is not None:
             candidates = robots_gate(candidates, self.robots).drop("host")
 
@@ -903,7 +899,7 @@ class SparkCrawler:
                     + int(self.quarantine_cooldown_tiers)
                 )
             qdim = F.broadcast(
-                st["host_fails"].filter(active).select(
+                st.host_fails.filter(active).select(
                     F.col("host").alias("q_host")
                 )
             )
@@ -919,7 +915,7 @@ class SparkCrawler:
         # read beats re-materializing the whole tier (one less full-tier
         # copy per round).
         if cfg.max_page_num > 0:
-            remaining = cfg.max_page_num - st["total_page"]
+            remaining = cfg.max_page_num - st.total_page
             if self.budget_mode == "host-proportional":
                 to_process = self._host_proportional_cut(
                     candidates, remaining
@@ -931,30 +927,135 @@ class SparkCrawler:
             to_process = to_process.localCheckpoint()
         else:
             to_process = candidates
-        n_processed = to_process.count()
-        st["total_page"] += n_processed
+        b = to_process.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("discovery_seq").alias("lo"),
+            F.max("discovery_seq").alias("hi"),
+        ).first()
+        n_processed = int(b["n"])
         mark("budget_checkpoint")
 
-        # C1/C2 politeness schedule (virtual time; metrics only in sandbox —
-        # a real-network deployment fetches per (host, slot) group)
-        makespan = None
-        if self.schedule_politeness and n_processed:
-            sched_dim = self.robots
-            if self.adaptive_delay:
-                # merge the adapted per-host delays with robots
-                # Crawl-delay; assign_fetch_schedule takes max() per host,
-                # so neither source can undercut the other
-                adapted = st["host_delays"]
-                sched_dim = (
-                    adapted
-                    if sched_dim is None
-                    else sched_dim.select("host", "crawl_delay").unionByName(
-                        adapted
-                    )
+        hot = None
+        if self.trap_cap is not None and (
+            cfg.max_depth <= 0 or depth + 1 <= cfg.max_depth
+        ):
+            hot = traps.url_explosions(
+                st.seen, self.trap_cap, prefix_depth=self.trap_prefix_depth
+            ).localCheckpoint()
+            mark("trap_profile")
+
+        chunks = [(None, to_process, n_processed)]
+        if self.tier_chunk_rows is not None and n_processed > self.tier_chunk_rows:
+            lo, hi = int(b["lo"]), int(b["hi"])
+            n_chunks = -(-(hi - lo + 1) // self.tier_chunk_rows)
+            step = -(-(hi - lo + 1) // n_chunks)
+            seq = F.col("discovery_seq")
+            chunks = []
+            for ci in range(n_chunks):
+                chunk = to_process.filter(
+                    (seq >= lo + ci * step) & (seq < lo + (ci + 1) * step)
                 )
+                n_rows = chunk.count()
+                if n_rows:  # else the chunk fell in a seq gap
+                    chunks.append((ci, chunk, n_rows))
+            mark("chunk_counts")
+
+        # politeness delays as of tier start (the AIMD fold below replaces
+        # st.host_delays): merge the adapted per-host delays with robots
+        # Crawl-delay; assign_fetch_schedule takes max() per host, so
+        # neither source can undercut the other
+        sched_dim = self.robots
+        if self.adaptive_delay:
+            sched_dim = (
+                st.host_delays
+                if sched_dim is None
+                else sched_dim.select("host", "crawl_delay").unionByName(
+                    st.host_delays
+                )
+            )
+
+        first = len(st.tiers)
+        segments, outcomes = [], []
+        for ci, chunk, n_rows in chunks:
+            rec = {
+                "depth": depth,
+                "frontier": 0 if segments else n_frontier,
+                "processed": n_rows,
+                "enqueued": 0,
+                "total_page": st.total_page,
+                "politeness_makespan_sec": None,
+                "phase_sec": {} if segments else phases,
+            }
+            if ci is not None:
+                rec["chunk"] = ci
+            new_frontier, outcome = self._tier(st, chunk, rec, hot)
+            segments.append(new_frontier)
+            if outcome is not None:
+                outcomes.append(outcome)
+            if self.fold_outputs and (
+                ci is not None or n_rows >= self.GC_NUDGE_MIN_TIER_ROWS
+            ):
+                # the chunk's extraction checkpoint is now unreferenced
+                # (digests folded, outcomes checkpointed, no lazy union
+                # holds it) — nudge the JVM so ContextCleaner releases its
+                # blocks before the next chunk grows: it only does so
+                # after a GC enqueues the weak refs, and the periodic GC
+                # is 30 min away. Chunking is chosen exactly when heap
+                # binds; without the nudge freed chunks piled up and
+                # round-5 constrained-heap legs OOMed unrolling the next.
+                self.spark.sparkContext._jvm.System.gc()
+        # each segment is already a checkpointed leaf, so the union is a
+        # flat read — same shape as the seen-segments accumulation
+        st.frontier = reduce(DataFrame.unionByName, segments)
+
+        # per-host state folds, once per tier over all chunks' outcomes
+        mark = _phase_clock(phases)
+        if outcomes:
+            tier_outcomes = reduce(DataFrame.unionByName, outcomes)
+            if self.quarantine_fails is not None:
+                st.host_fails = self._quarantine_fold(
+                    st.host_fails, tier_outcomes, depth
+                ).localCheckpoint()
+                mark("quarantine_fold")
+            if self.adaptive_delay:
+                # AIMD: this tier's fetch outcomes → next tier's
+                # crawl-delay dim (host-cardinality agg)
+                st.host_delays = (
+                    adapt_crawl_delay(
+                        tier_outcomes,
+                        st.host_delays,
+                        default_delay=cfg.min_request_interval,
+                    )
+                    .select("host", "crawl_delay")
+                    .localCheckpoint()
+                )
+                mark("delay_fold")
+
+        # C1/C2 politeness schedule (virtual time; metrics only in sandbox —
+        # a real-network deployment fetches per (host, slot) group). Taken
+        # last: a layer profiler bills the work after a lazy schedule call
+        # to politeness until the next crawler step, so nothing follows it.
+        if n_processed:
             scheduled = assign_fetch_schedule(to_process, cfg, sched_dim)
-            makespan = tier_makespan(scheduled, cfg)
-        mark("politeness")
+            st.tiers[first]["politeness_makespan_sec"] = tier_makespan(
+                scheduled, cfg
+            )
+            mark("politeness")
+        return True
+
+    def _tier(
+        self, st: LoopState, chunk: DataFrame, rec: dict, hot: DataFrame | None
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """One chunk of a tier's to_process: fetch → extract →
+        fold/retain → trap prune → seen anti-join → rank → seen union.
+        Fills in and appends the chunk's record *rec* (``processed`` is
+        the chunk's row count); *hot* is the tier's trap hot-prefix set
+        (None = no trap gate). Returns the chunk's enqueued frontier and,
+        when quarantine or AIMD is on, its per-host outcomes."""
+        cfg, depth = self.cfg, st.depth
+        mark = _phase_clock(rec["phase_sec"])
+        n_rows = rec["processed"]
+        st.total_page += n_rows
 
         # S2 fetch (optionally through the S3 TTL cache). In the plain
         # path `fetched` stays LAZY: the pages join fuses into the single
@@ -962,18 +1063,18 @@ class SparkCrawler:
         # once and never stored; the TTL-cache path materializes them (the
         # cache replays fetched bodies across rounds).
         if self.fetch_cache is None:
-            fetched = self._do_fetch(to_process, n_processed)
+            fetched = self._do_fetch(chunk, n_rows)
         else:
             from . import fetch_cache as fc
 
             now = self._clock()
             hits, misses = fc.split_by_ttl(
-                to_process, self.fetch_cache, now, self.fetch_ttl
+                chunk, self.fetch_cache, now, self.fetch_ttl
             )
-            fetched_new = self._do_fetch(misses, n_processed).localCheckpoint()
+            fetched_new = self._do_fetch(misses, n_rows).localCheckpoint()
             # cache hits replay without a latency_ms column (paced mode
             # measures it on fresh fetches only) — they union as NULL and
-            # the AIMD fold coalesces to 0
+            # the outcome rollup coalesces to 0
             fetched = hits.unionByName(
                 fetched_new, allowMissingColumns=True
             ).localCheckpoint()
@@ -993,101 +1094,10 @@ class SparkCrawler:
         )
         mark("extract")
 
-        # shared per-tier frame for the breaker and AIMD folds:
-        # scheduled-but-not-fetched hosts (join mode: URL absent from the
-        # pages store; paced mode: fetch_fn error arm). Empty hosts are
-        # excluded everywhere: verbatim relative-href children (netloc='',
-        # a reference-parity invariant) and unparseable authorities would
-        # otherwise pool into ONE shared '' key. Materialized only when
-        # BOTH consumers are on (each alone executes the join once anyway).
-        missed_hosts = None
+        outcomes = None
         if self.quarantine_fails is not None or self.adaptive_delay:
-            missed_hosts = (
-                with_host(to_process)
-                .filter(F.col("host") != "")
-                .select("host", "url_norm")
-                .join(combined.select("url_norm"), "url_norm", "left_anti")
-            )
-            if self.quarantine_fails is not None and self.adaptive_delay:
-                missed_hosts = missed_hosts.localCheckpoint()
-
-        # circuit-breaker fold: this tier's per-host outcomes into the
-        # quarantine state. Successes = combined (the checkpointed fetch
-        # result); failures = the shared missed_hosts frame. Both sides
-        # are host-rollups of this tier only — tiny aggs.
-        if self.quarantine_fails is not None:
-            ok_counts = (
-                with_host(combined)
-                .filter(F.col("host") != "")
-                .groupBy("host")
-                .agg(F.count(F.lit(1)).alias("n_ok"))
-            )
-            fail_counts = missed_hosts.groupBy("host").agg(
-                F.count(F.lit(1)).alias("n_fail")
-            )
-            st["host_fails"] = self._quarantine_fold(
-                st["host_fails"], ok_counts, fail_counts, depth
-            ).localCheckpoint()
-            mark("quarantine_fold")
-
-        # AIMD fold: this tier's fetch outcomes → next tier's crawl-delay
-        # dim. ok = the server answered and wasn't erroring (join-mode
-        # miss / paced error arm stay 'Unknown'; 5xx and 429 are stress).
-        # Same ''-host exclusion as the breaker. Host-cardinality agg —
-        # tiny, one pass over rows already materialized in `combined`.
-        if self.adaptive_delay:
-            from .politeness import adapt_crawl_delay
-
-            status = F.col("status").cast("string")
-            ok_col = ~(
-                (status == "Unknown")
-                | status.startswith("5")
-                | (status == "429")
-            )
-            # observed latency when the paced executor measured it
-            # (real-fetch mode); join mode carries no latency column and
-            # the p95 arm stays inert at 0
-            latency = (
-                F.coalesce("latency_ms", F.lit(0.0))
-                if "latency_ms" in combined.columns
-                else F.lit(0.0)
-            )
-            # failure arm: same row set as the breaker (the anti-join),
-            # but paced mode carries the MEASURED latency of each failed
-            # fetch (stashed by _do_fetch); rows the executor never
-            # issued (robots-denied, join-mode misses) coalesce to 0
-            fail_side = missed_hosts
-            if self._tier_fail_latency is not None:
-                fail_side = fail_side.join(
-                    self._tier_fail_latency, "url_norm", "left"
-                )
-                fail_lat = F.coalesce("latency_ms", F.lit(0.0))
-            else:
-                fail_lat = F.lit(0.0)
-            tier_stats = (
-                with_host(combined)
-                .filter(F.col("host") != "")
-                .select(
-                    "host", ok_col.alias("ok"), latency.alias("latency_ms")
-                )
-                .unionByName(
-                    fail_side.select(
-                        "host",
-                        F.lit(False).alias("ok"),
-                        fail_lat.alias("latency_ms"),
-                    )
-                )
-            )
-            st["host_delays"] = (
-                adapt_crawl_delay(
-                    tier_stats,
-                    st["host_delays"],
-                    default_delay=cfg.min_request_interval,
-                )
-                .select("host", "crawl_delay")
-                .localCheckpoint()
-            )
-            mark("delay_fold")
+            outcomes = self._host_outcomes(chunk, combined)
+            mark("host_outcomes")
 
         # P1+P2 link extraction, gated by F7 (crawler.py:343-344)
         children = extraction.children_of(combined)
@@ -1096,15 +1106,14 @@ class SparkCrawler:
             # digest/count folding (scale-leg retention): per-tier sums
             # recorded in the tier metrics record — resume-safe because
             # tier records are part of the checkpoint manifest.
-            tier_fold = self._fold_tier(combined)
+            rec["fold"] = self._fold_tier(combined)
             mark("fold_outputs")
         else:
-            tier_fold = None
             # P10 metadata projection + P7 title
-            st["nodes"] = st["nodes"].unionByName(extraction.nodes_of(combined))
+            st.nodes = st.nodes.unionByName(extraction.nodes_of(combined))
 
             # P3 secrets — extracted from every fetched page (crawler.py:296)
-            st["secrets"] = st["secrets"].unionByName(
+            st.secrets = st.secrets.unionByName(
                 extraction.secrets_of(combined)
             )
 
@@ -1112,9 +1121,7 @@ class SparkCrawler:
             # lazy unions over the per-tier checkpointed `combined`; the
             # single dropDuplicates in _loop dedups the whole accumulation
             # at the end
-            st["edges"] = st["edges"].unionByName(
-                extraction.edges_of(children)
-            )
+            st.edges = st.edges.unionByName(extraction.edges_of(children))
 
         # D1 enqueue: depth gate F8 + filter chain + seen anti-join
         is_extending = cfg.max_depth <= 0 or depth + 1 <= cfg.max_depth
@@ -1122,34 +1129,26 @@ class SparkCrawler:
         if is_extending:
             eligible = (
                 children.filter(_accept_expr(cfg))
-                .groupBy("url_norm", "scheme", "netloc", "path", "params",
-                         "query", "fragment")
+                .groupBy("url_norm", *URL_PART_COLS)
                 .agg(F.min("parent_seq").alias("min_parent_seq"),
                      F.min("parent_norm").alias("parent_norm"))
             )
-            if self.trap_cap is not None:
-                from . import traps
-
-                hot = traps.url_explosions(
-                    st["seen"], self.trap_cap,
-                    prefix_depth=self.trap_prefix_depth,
-                )
+            if hot is not None:
                 eligible = traps.prune_trapped(
                     eligible, hot, prefix_depth=self.trap_prefix_depth
                 )
-            new_nodes = self._seen_anti_join(eligible, st["seen"], seen_state)
+            new_nodes = self._seen_anti_join(eligible, st.seen, st.seen_filter)
             # ranking materializes + counts its input anyway; reuse that
             # count as n_new (rank preserves rows) — one job less per tier
             ranked, n_new = assign_global_seq_with_count(
-                new_nodes, ["min_parent_seq", "url_norm"], start=st["next_seq"]
+                new_nodes, ["min_parent_seq", "url_norm"], start=st.next_seq
             )
             new_frontier = self._scale_ckpt(ranked.select(
-                "url_norm", "scheme", "netloc", "path", "params", "query",
-                "fragment", F.lit(depth + 1).alias("depth"),
+                "url_norm", *URL_PART_COLS, F.lit(depth + 1).alias("depth"),
                 "parent_norm", "discovery_seq",
             ))
             mark("enqueue_rank")
-            st["next_seq"] += n_new
+            st.next_seq += n_new
             # LAZY union: the increment (new_frontier) is already
             # checkpointed, and every prior segment is too, so the union
             # is a flat read of materialized blocks — re-checkpointing
@@ -1157,7 +1156,7 @@ class SparkCrawler:
             # per tier (3.5-21.8 s/tier at the 10^8 leg; at a 10^10
             # deployment the seen table is an Iceberg APPEND, which this
             # union-of-segments shape mirrors)
-            st["seen"] = st["seen"].unionByName(
+            st.seen = st.seen.unionByName(
                 new_frontier.select("url_norm", "depth", "discovery_seq")
             )
             # deep-crawl guard: the union tree grows one leg per tier and
@@ -1166,30 +1165,20 @@ class SparkCrawler:
             # Flatten every 16 tiers — amortized copy cost O(total/16),
             # and a shallow BFS never pays it (snapshot rounds flatten to
             # parquet reads on their own).
-            st["seen_segments"] = st.get("seen_segments", 1) + 1
-            if st["seen_segments"] >= 16:
-                st["seen"] = st["seen"].localCheckpoint()
-                st["seen_segments"] = 1
+            st.seen_segments += 1
+            if st.seen_segments >= 16:
+                st.seen = st.seen.localCheckpoint()
+                st.seen_segments = 1
             mark("seen_union")
-            if seen_state is not None and n_new:
-                seen_state = self._seen_update(seen_state, new_frontier)
+            if st.seen_filter is not None and n_new:
+                st.seen_filter = self._seen_update(st.seen_filter, new_frontier)
         else:
             new_frontier = self._empty(FRONTIER_SCHEMA)
 
-        tier_rec = {
-            "depth": depth,
-            "frontier": n_frontier,
-            "processed": n_processed,
-            "enqueued": n_new,
-            "total_page": st["total_page"],
-            "politeness_makespan_sec": makespan,
-            "phase_sec": phase_t,
-        }
-        if tier_fold is not None:
-            tier_rec["fold"] = tier_fold
-        st["tiers"].append(tier_rec)
-        st["frontier"] = new_frontier
-        return seen_state
+        rec["enqueued"] = n_new
+        rec["total_page"] = st.total_page
+        st.tiers.append(rec)
+        return new_frontier, outcomes
 
     def _fold_tier(self, combined: DataFrame) -> dict:
         """One tier's nodes/secrets/edges digests+counts in ONE scan of
@@ -1210,8 +1199,6 @@ class SparkCrawler:
         separate explode-dedup-agg jobs per tier; at the 10^9 leg's
         51 M-row tier that cost 126.8 s of re-scanning — this is one
         pass."""
-        from . import extraction as expl
-
         dec = "decimal(38,0)"
 
         def hfold(arr, fn):
@@ -1221,15 +1208,15 @@ class SparkCrawler:
                 lambda acc, x: acc + fn(x).cast(dec),
             )
 
-        node_h = F.xxhash64(*expl.node_digest_exprs()).cast(dec)
+        node_h = F.xxhash64(*extraction.node_digest_exprs()).cast(dec)
         sec_h = hfold(
             F.col("ex.secrets"),
-            lambda s: F.xxhash64(*expl.secret_digest_exprs(s)),
+            lambda s: F.xxhash64(*extraction.secret_digest_exprs(s)),
         )
-        edge_pairs = expl.edge_pairs_expr()
+        edge_pairs = extraction.edge_pairs_expr()
         edge_h = hfold(
             edge_pairs,
-            lambda p: F.xxhash64(*expl.edge_digest_exprs(p)),
+            lambda p: F.xxhash64(*extraction.edge_digest_exprs(p)),
         )
         row = combined.agg(
             F.sum(node_h).alias("nd"),
@@ -1245,31 +1232,31 @@ class SparkCrawler:
             "edges": {"digest": int(row["ed"] or 0), "rows": int(row["en"] or 0)},
         }
 
-    def _snapshot(self, st: dict) -> None:
+    def _snapshot(self, st: LoopState) -> None:
         state = ckpt.CrawlState(
-            depth=st["depth"],
-            total_page=st["total_page"],
-            next_seq=st["next_seq"],
-            tiers=st["tiers"],
+            depth=st.depth,
+            total_page=st.total_page,
+            next_seq=st.next_seq,
+            tiers=st.tiers,
         )
         tables = {
-            "frontier": st["frontier"],
-            "seen": st["seen"],
-            "nodes": st["nodes"],
-            "edges": st["edges"],
-            "secrets": st["secrets"],
+            "frontier": st.frontier,
+            "seen": st.seen,
+            "nodes": st.nodes,
+            "edges": st.edges,
+            "secrets": st.secrets,
         }
         if self.quarantine_fails is not None:
-            tables["host_fails"] = st["host_fails"]
+            tables["host_fails"] = st.host_fails
         if self.adaptive_delay:
-            tables["host_delays"] = st["host_delays"]
+            tables["host_delays"] = st.host_delays
         lineage = ckpt.write_round(self.checkpoint_dir, state, tables)
-        st["tiers"][-1]["lineage"] = {k: len(v) for k, v in lineage.items()}
+        st.tiers[-1]["lineage"] = {k: len(v) for k, v in lineage.items()}
         # re-read snapshots so downstream lineage points at parquet, not RAM
-        base = ckpt._round_dir(self.checkpoint_dir, st["depth"])
+        base = ckpt._round_dir(self.checkpoint_dir, st.depth)
         for name in tables:
-            st[name] = self.spark.read.parquet(f"{base}/{name}")
+            setattr(st, name, self.spark.read.parquet(f"{base}/{name}"))
         # seen is now a single parquet leaf — restart the union-of-segments
         # count so the 16-tier flatten doesn't fire early and pay an extra
         # full-table localCheckpoint copy the snapshot already provides
-        st["seen_segments"] = 1
+        st.seen_segments = 1

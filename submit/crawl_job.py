@@ -82,9 +82,12 @@ def main() -> None:
                          "use the --checksum formula and are reported in "
                          "the output JSON; incompatible with --out.")
     ap.add_argument("--tier-chunk-rows", type=int, default=None,
-                    help="split tiers bigger than this into seq-contiguous "
-                         "sub-tiers (bit-identical digests; bounds peak "
-                         "heap to O(chunk) — the ≥5e7-row-tier mitigation)")
+                    help="run each tier's fetch→enqueue in seq-contiguous "
+                         "chunks of at most this many rows (gates, budget, "
+                         "politeness and quarantine/AIMD folds stay per "
+                         "tier; bit-identical digests with any other flag; "
+                         "bounds peak heap to O(chunk) — the ≥5e7-row-tier "
+                         "mitigation)")
     ap.add_argument("--resume-from", type=int, default=None,
                     help="resume the crawl from this committed round of "
                          "--checkpoint-dir instead of seeding (scale-leg "

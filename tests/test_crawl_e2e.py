@@ -100,6 +100,19 @@ def test_whitelist_scope(spark, site_pdf, site):
         assert "site1.test" in r.url_norm
 
 
+def test_out_of_scope_middle_seed(spark, site_pdf, site):
+    """A seed the scope filter rejects takes no discovery_seq: the seeds
+    after it number on without a gap, and enqueue numbering continues
+    after the last accepted seed (no two rows share a seq)."""
+    from secretscraper_spark.sources.sitegen import url_for
+
+    seeds = [url_for(0, N_HOSTS), "http://elsewhere.example/x", url_for(5, N_HOSTS)]
+    cfg = CrawlConfig(max_depth=1, max_page_num=0, white_list=["*.test"])
+    sim, res = run_both(spark, site_pdf, site, cfg, seeds=seeds)
+    assert sim.seen[url_for(5, N_HOSTS)] == (0, 1)
+    assert_parity(sim, res)
+
+
 def test_blacklist(spark, site_pdf, site):
     cfg = CrawlConfig(max_depth=2, max_page_num=0, black_list=["site0.test", "*.site0.test"])
     sim, res = run_both(spark, site_pdf, site, cfg)

@@ -18,8 +18,17 @@ from secretscraper_spark.plans.politeness import (
 )
 from secretscraper_spark.plans.validate import validate_pass
 from secretscraper_spark.refsim import simulate, site_from_pandas
-from secretscraper_spark.schemas import ROBOTS_SCHEMA
+from secretscraper_spark.schemas import FRONTIER_SCHEMA, ROBOTS_SCHEMA
 from secretscraper_spark.sources.sitegen import generate_pages_pandas, seeds_for
+
+
+def _digest(df, cols):
+    """Order-invariant sum-of-xxhash64 digest of *cols* (the crawl_job
+    --checksum formula)."""
+    row = df.select(
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("d")
+    ).collect()[0]
+    return str(row["d"])
 
 
 def make_frontier(spark, rows):
@@ -379,7 +388,8 @@ class TestBucketedBloom:
 
 class TestDistributedSeedFrontier:
     """seed_frontier's executor-side path must reproduce the driver path
-    exactly — first-occurrence dedup, seq gaps left by the scope filter."""
+    exactly — first-occurrence dedup, dense seqs over the scope-accepted
+    seeds."""
 
     def test_paths_identical(self, spark):
         from secretscraper_spark.config import CrawlConfig
@@ -397,9 +407,10 @@ class TestDistributedSeedFrontier:
         a = sorted(key(r) for r in drv.collect())
         b = sorted(key(r) for r in dst.collect())
         assert a == b and a
-        # the filtered-out seed leaves a gap in the sequence (parity quirk)
+        # seqs number only the accepted seeds (refsim parity): the
+        # filtered-out seed leaves no gap
         seqs = sorted(r.discovery_seq for r in drv.collect())
-        assert len(seqs) == max(seqs)  # one missing value below the max
+        assert seqs == list(range(len(seqs)))
 
 
 class TestShardedSeenExactnessAtScale:
@@ -759,32 +770,32 @@ class TestSyntheticFetch:
         # the split actually happened: more tier records, chunk-tagged
         assert len(chunked.tiers) > len(mono.tiers)
         assert any("chunk" in t for t in chunked.tiers)
-        # chunk-grained state folds are refused, not approximated
-        with pytest.raises(ValueError):
-            SparkCrawler(
-                spark, empty, cfg, fetch_mode="mapped",
-                fetch_map_fn=sg.synthetic_fetch_map(n_pages, n_hosts),
-                tier_chunk_rows=500, quarantine_fails=2,
-            )
 
     def test_tier_chunking_gapped_seed_frontier(self, spark):
-        """Seed frontiers are scope-filtered AFTER discovery_seq is
-        assigned, so whitelist-filtered seeds leave a gap in the seq
-        range. Chunks are sized from the seq span, so a gap can only
-        thin a chunk — every chunk stays within tier_chunk_rows (sizing
-        from the row count put 134 rows into a 100-row chunk here) and
-        the digests still equal the monolithic run's."""
-        from pyspark.sql import functions as F
-
+        """A prebuilt frontier's out-of-scope rows are filtered after its
+        discovery_seq was assigned, which leaves a gap in the seq range.
+        Chunks are sized from the seq span, so a gap can only thin a
+        chunk — every chunk stays within tier_chunk_rows — and the
+        digests still equal the monolithic run's. Enqueue numbering
+        continues from max(discovery_seq) + 1, so no child reuses a
+        frontier row's seq (continuing from the row count did)."""
         from secretscraper_spark.sources import sitegen as sg
 
         n_pages, n_hosts, rows = 2000, 8, 100
-        # seqs 0-199 in scope, 200-299 filtered out, 300-399 in scope
-        seeds = [
+        # seqs 0-199 in scope, 200-299 out of scope, 300-399 in scope
+        urls = [
             sg.url_for(5 * i, n_hosts) if not 200 <= i < 300
             else f"http://elsewhere.example/p/{i}"
             for i in range(400)
         ]
+        frontier = spark.createDataFrame(
+            [
+                (u, "http", u.split("/")[2], "/" + u.split("/", 3)[3],
+                 "", "", "", 0, None, i)
+                for i, u in enumerate(urls)
+            ],
+            FRONTIER_SCHEMA,
+        )
         cfg = CrawlConfig(max_depth=1, max_page_num=300, white_list=["*.test"])
         empty = spark.createDataFrame(
             [], "url_norm string, status string, content_type string, "
@@ -798,47 +809,100 @@ class TestSyntheticFetch:
                 fold_outputs=True, tier_chunk_rows=chunk,
             )
 
-        mono = mk(None).run(seeds)
-        chunked = mk(rows).run(seeds)
+        mono = mk(None).run_from_frontier(frontier)
+        chunked = mk(rows).run_from_frontier(frontier)
 
-        def digest(df):
-            row = df.select(
-                F.sum(
-                    F.xxhash64("url_norm", "depth", "discovery_seq")
-                    .cast("decimal(38,0)")
-                ).alias("d")
-            ).collect()[0]
-            return str(row["d"])
-
+        seen_cols = ["url_norm", "depth", "discovery_seq"]
         chunks = [t for t in chunked.tiers if "chunk" in t]
         assert len(chunks) > 1
-        assert all(t["frontier"] <= rows for t in chunks), chunks
-        assert digest(chunked.seen) == digest(mono.seen)
+        assert all(t["processed"] <= rows for t in chunks), chunks
+        assert _digest(chunked.seen, seen_cols) == _digest(mono.seen, seen_cols)
         assert chunked.folded == mono.folded
         assert chunked.total_page == mono.total_page == 300
+        n_seen = mono.seen.count()
+        assert mono.seen.select("discovery_seq").distinct().count() == n_seen
+        assert n_seen > 300  # the tier enqueued children
 
-    def test_tier_chunking_refuses_host_proportional_budget(self, spark):
-        """Host-proportional quotas allocated per chunk pick a different
-        page set from the per-tier cut, so chunking refuses that
-        combination under a page budget (without a budget every page is
-        taken and the cut is a no-op)."""
+    def _failing_host_crawler(self, spark, n_pages, n_hosts, cfg, **kw):
+        """Mapped-fetch crawler over the synthetic site with every page
+        of site3.test missing: its fetches all fail, so the quarantine
+        breaker trips and AIMD backs the host off."""
         from secretscraper_spark.sources import sitegen as sg
 
+        site = sg.synthetic_fetch_map(n_pages, n_hosts)
         empty = spark.createDataFrame(
             [], "url_norm string, status string, content_type string, "
             "content_length long, caption string",
         )
+        return SparkCrawler(
+            spark, empty, cfg, fetch_mode="mapped",
+            fetch_map_fn=lambda df: site(df).filter(
+                ~F.col("url_norm").contains("//site3.test/")
+            ),
+            fold_outputs=True, **kw,
+        )
 
-        def mk(max_page_num):
-            return SparkCrawler(
-                spark, empty, CrawlConfig(max_page_num=max_page_num),
-                fetch_mode="mapped", fetch_map_fn=sg.synthetic_fetch_map(100),
-                tier_chunk_rows=10, budget_mode="host-proportional",
-            )
+    def test_tier_chunking_state_folds_parity(self, spark):
+        """Quarantine, AIMD and the trap gate fold tier-grained data at
+        any chunk size: chunked ≡ monolithic in seen (with seq), fold
+        digests, total_page, and the final breaker and delay state. The
+        default 1000-page budget cuts the last tier, so the budget cut
+        runs under chunking too."""
+        from secretscraper_spark.sources import sitegen as sg
 
-        with pytest.raises(ValueError, match="host-proportional"):
-            mk(50)
-        assert mk(0).tier_chunk_rows == 10
+        n_pages, n_hosts = 4000, 8
+        cfg = CrawlConfig(max_depth=3)
+        seeds = [sg.url_for(i, n_hosts) for i in range(0, n_pages, 37)]
+
+        def run(chunk):
+            return self._failing_host_crawler(
+                spark, n_pages, n_hosts, cfg, tier_chunk_rows=chunk,
+                quarantine_fails=2, adaptive_delay=True,
+                trap_cap=150, trap_prefix_depth=1,
+            ).run(seeds)
+
+        mono, chunked = run(None), run(150)
+        seen_cols = ["url_norm", "depth", "discovery_seq"]
+        assert _digest(chunked.seen, seen_cols) == _digest(mono.seen, seen_cols)
+        assert chunked.folded == mono.folded
+        assert chunked.total_page == mono.total_page
+        fails = {tuple(r) for r in mono.host_fails.collect()}
+        delays = {tuple(r) for r in mono.host_delays.collect()}
+        assert {tuple(r) for r in chunked.host_fails.collect()} == fails
+        assert {tuple(r) for r in chunked.host_delays.collect()} == delays
+        # both folds fired on the failing host, and the split happened
+        assert "site3.test" in {h for h, _, qat in fails if qat is not None}
+        assert dict(delays)["site3.test"] > cfg.min_request_interval
+        assert any("chunk" in t for t in chunked.tiers)
+        # the trap gate bit: the uncapped crawl enqueues more
+        uncapped = self._failing_host_crawler(
+            spark, n_pages, n_hosts, cfg, quarantine_fails=2,
+            adaptive_delay=True,
+        ).run(seeds)
+        assert uncapped.seen.count() > mono.seen.count()
+
+    def test_tier_chunking_host_proportional_budget_parity(self, spark):
+        """The host-proportional budget cut runs once per tier, so a
+        chunked run under a page budget fetches the same pages as the
+        unchunked run."""
+        from secretscraper_spark.sources import sitegen as sg
+
+        n_pages, n_hosts = 3000, 8
+        cfg = CrawlConfig(max_depth=0, max_page_num=900)
+        seeds = [sg.url_for(i, n_hosts) for i in range(0, n_pages, 3)]
+
+        def run(chunk):
+            return self._failing_host_crawler(
+                spark, n_pages, n_hosts, cfg, tier_chunk_rows=chunk,
+                budget_mode="host-proportional",
+            ).run(seeds)
+
+        mono, chunked = run(None), run(200)
+        seen_cols = ["url_norm", "depth", "discovery_seq"]
+        assert _digest(chunked.seen, seen_cols) == _digest(mono.seen, seen_cols)
+        assert chunked.folded == mono.folded
+        assert chunked.total_page == mono.total_page == 900
+        assert any("chunk" in t for t in chunked.tiers)
 
     def test_tier_chunking_resume_parity(self, spark, tmp_path):
         """Chunked tiers × checkpoint-resume: snapshots land once per
@@ -885,6 +949,38 @@ class TestSyntheticFetch:
         assert resumed.folded == full_folded
         assert resumed.total_page == full_total
         assert digest(resumed.seen) == full_seen_digest
+
+    def test_tier_chunking_state_folds_resume_parity(self, spark, tmp_path):
+        """A chunked quarantine + AIMD run resumed from round 0 matches
+        the uninterrupted run, breaker and delay state included."""
+        from secretscraper_spark.sources import sitegen as sg
+
+        n_pages, n_hosts = 3000, 8
+        cfg = CrawlConfig(max_depth=2)
+        seeds = [sg.url_for(i, n_hosts) for i in range(0, n_pages, 41)]
+        ck = str(tmp_path / "ck_folds")
+
+        def mk():
+            return self._failing_host_crawler(
+                spark, n_pages, n_hosts, cfg, tier_chunk_rows=400,
+                quarantine_fails=1, adaptive_delay=True, checkpoint_dir=ck,
+            )
+
+        def state(res):
+            return (
+                res.folded, res.total_page,
+                _digest(res.seen, ["url_norm", "depth", "discovery_seq"]),
+                {tuple(r) for r in res.host_fails.collect()},
+                {tuple(r) for r in res.host_delays.collect()},
+            )
+
+        # materialize the uninterrupted run's evidence before resuming:
+        # resume() re-writes the round snapshots full.seen lazily reads
+        full = mk().run(seeds)
+        assert any("chunk" in t for t in full.tiers)
+        want = state(full)
+        assert want[3]  # the breaker tripped
+        assert state(mk().resume(from_round=0)) == want
 
     def test_fold_digest_collision_parity(self, spark):
         """ADVICE round-4: the fold's edge digest must stay bit-equal to
@@ -1419,6 +1515,27 @@ def test_tier_makespan_uses_effective_interval(spark):
     # 15 urls / 5 per slot = 3 slots at the 1.0s crawl-delay override:
     # drain = 3 * 1.0, NOT max virtual_start + the global 0.2 minimum
     assert tier_makespan(sched, cfg) == pytest.approx(3.0)
+
+
+def test_tier_makespan_prunes_window_sort(spark, monkeypatch):
+    """The makespan reads only (host, interval) of the schedule, so the
+    optimizer drops assign_fetch_schedule's per-host window sort: one
+    groupBy count per tier instead of a window over every row."""
+    cfg = CrawlConfig(max_concurrent_per_domain=3)
+    rows = [(f"http://h{i % 4}.test/{i}", f"h{i % 4}.test", f"/{i}", i) for i in range(30)]
+    sched = assign_fetch_schedule(make_frontier(spark, rows), cfg)
+    assert "Window" in sched._jdf.queryExecution().optimizedPlan().toString()
+    queried = []
+    frame_cls = type(sched)
+    first = frame_cls.first
+    monkeypatch.setattr(
+        frame_cls, "first", lambda self: queried.append(self) or first(self)
+    )
+    # h0, h1 hold 8 rows and h2, h3 hold 7: 3 slots of 0.2 s each
+    assert tier_makespan(sched, cfg) == pytest.approx(0.6)
+    (makespan_query,) = queried
+    plan = makespan_query._jdf.queryExecution().optimizedPlan().toString()
+    assert "Window" not in plan
 
 
 def test_allocate_host_budget_schema_is_volume_independent(spark):
